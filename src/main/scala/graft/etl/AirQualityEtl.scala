@@ -216,24 +216,48 @@ object AirQualityEtl {
         $"hour".as("hour_num"))
   }
 
+  private[etl] val CommitThreadName = "graft-etl-commit"
+
   /** Load + upsert one batch into the store (scrapper.py:329-331):
     * three keyed MERGEs, each restricted to the report-date partitions
     * the batch touches (an hourly batch touches exactly one) — the
     * reference's per-table transaction at partition granularity.
     * `p_date` = yyyymmdd prefix of `report_ts`, so it is functionally
-    * determined by every table's key. */
+    * determined by every table's key.
+    *
+    * The three tables commit concurrently, one pool thread each, and
+    * each commit is its own atomic `_pmanifest` rename — the same as
+    * the reference's three separate transactions (no cross-table
+    * atomicity either way). Commit jobs run under the caller's active
+    * session and local properties (job tags, scheduler pool). Returns
+    * once all three have finished; if any failed, rethrows the first
+    * failure's own exception with the others attached as suppressed. */
   def runBatch(spark: SparkSession, store: graft.operators.TableStore, html: String,
       cfg: EtlConfig = EtlConfig.default): Batch = {
     val b = batchFromHtml(spark, html, cfg)
     def withDate(df: DataFrame): DataFrame =
       df.withColumn("p_date", (col("report_ts") / 100).cast("int"))
-    // hourly report tables are micro-batch-sized — one output file each
-    store.upsertPartitioned(spark, "cdmx", withDate(b.cdmx),
-      cfg.tableKeys("cdmx"), "p_date", numFiles = Some(1))
-    store.upsertPartitioned(spark, "edomex", withDate(b.edomex),
-      cfg.tableKeys("edomex"), "p_date", numFiles = Some(1))
-    store.upsertPartitioned(spark, "gral_stats", withDate(b.gralStats),
-      cfg.tableKeys("gral_stats"), "p_date", numFiles = Some(1))
+    val tables = Seq("cdmx" -> b.cdmx, "edomex" -> b.edomex, "gral_stats" -> b.gralStats)
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size,
+      (r: Runnable) => new Thread(r, CommitThreadName))
+    try {
+      val commits = tables.map { case (name, df) =>
+        org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(session, pool) {
+          // hourly report tables are micro-batch-sized — one output file each
+          store.upsertPartitioned(spark, name, withDate(df),
+            cfg.tableKeys(name), "p_date", numFiles = Some(1))
+        }
+      }
+      val failures = commits.flatMap { c =>
+        try { c.join(); None }
+        catch { case e: java.util.concurrent.CompletionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
     b
   }
 }

@@ -2084,7 +2084,8 @@ final class TableStore(val root: String, val retain: Int = 0) {
     * contract as whole-table `replace`; a multi-writer deployment
     * serializes commits through a lock service or uses
     * `replaceIfUnchanged`-style CAS on a versioned manifest name —
-    * a filesystem rename alone cannot arbitrate.
+    * a filesystem rename alone cannot arbitrate. Distinct tables of
+    * one store commit independently and may commit concurrently.
     *
     * `dropIfUnwritten`: partition dir names to REMOVE from the table
     * in this same commit if the batch produced no replacement data for

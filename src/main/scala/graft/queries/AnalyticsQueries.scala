@@ -2943,7 +2943,7 @@ object AnalyticsQueries {
     store
   }
 
-  private def copurchasePairs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def copurchasePairs(s: SparkSession, dir: String): DataFrame =
     copurchaseStore(s, dir).read(s, "pairs").select("part_a", "part_b")
 
   /** Degree-ordered triangle count of an undirected (a < b) pair set

@@ -2,7 +2,12 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSpec
 import graft.operators.TableStore
@@ -76,6 +81,56 @@ class AirQualityEtlSpec extends SparkSpec {
     def strip(rs: Array[Row]) = rs.map(r => r.toSeq.updated(r.fieldIndex("nupdates"), 0L)).toSet
     assert(strip(first) == strip(second))
     assert(store.read(spark, "gral_stats").collect().head.getAs[Long]("nupdates") == 2L)
+  }
+
+  private def commitThreadsAlive(): Boolean =
+    Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName == AirQualityEtl.CommitThreadName && t.isAlive)
+
+  test("runBatch: a failed table commit rethrows its own exception; the other tables commit whole") {
+    val store = freshStore()
+    // gral_stats pre-created in whole-table mode: its partitioned
+    // commit hits replacePartitions' mode guard
+    val b = AirQualityEtl.batchFromHtml(spark, html)
+    store.replace(spark, "gral_stats", b.gralStats
+      .withColumn("p_date", (col("report_ts") / 100).cast("int"))
+      .withColumn("nupdates", lit(1L)))
+    val e = intercept[IllegalArgumentException] {
+      AirQualityEtl.runBatch(spark, store, html)
+    }
+    assert(e.getMessage.contains("whole-table versioned mode"), e.getMessage)
+    assert(store.read(spark, "cdmx").count() == 4)
+    assert(store.read(spark, "edomex").count() == 2)
+    val deadline = System.nanoTime() + 10000000000L
+    while (commitThreadsAlive() && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(!commitThreadsAlive(), "a commit pool thread outlived runBatch")
+  }
+
+  test("runBatch: every commit job carries the caller's job tag, on insert and on update") {
+    val store = freshStore()
+    val sc = spark.sparkContext
+    val jobTags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobTags.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.tags"))).getOrElse(""))
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.addJobTag("etl-hour")
+    try {
+      AirQualityEtl.runBatch(spark, store, html) // insert
+      AirQualityEtl.runBatch(spark, store, html) // update path
+      ListenerBus.drain(sc)
+    } finally {
+      sc.removeJobTag("etl-hour")
+      sc.removeSparkListener(listener)
+    }
+    val tags = jobTags.asScala.toSeq
+    assert(tags.nonEmpty)
+    assert(tags.forall(_.split(',').contains("etl-hour")), tags)
+    for (t <- Seq("cdmx", "edomex", "gral_stats"))
+      assert(store.read(spark, t).collect().forall(_.getAs[Long]("nupdates") == 2L), t)
   }
 
   test("archive fan-out: executor-side parse of many pages equals the single-page path; bad pages drop per-page") {

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
@@ -179,6 +181,37 @@ class TableStorePartitionSpec extends SparkSpec {
     assert((at(0), at(1), at(2)) == ("v4", "v3", "v2"))
     intercept[IllegalArgumentException] { at(3) }
     assert(store.versionDepth(spark, "t") == 3)
+  }
+
+  test("independent tables of one store commit concurrently: rows, counters, history intact; no staging left") {
+    val dir = Files.createTempDirectory(Paths.get("target"), "pstore-conc-")
+    val store = new TableStore(dir.toString, retain = 5)
+    val tables = Seq("t0", "t1", "t2")
+    val rounds = 5
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
+    try {
+      val writers = tables.map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          override def call(): Unit = (1 to rounds).foreach { r =>
+            store.upsertPartitioned(spark, t, batch(1, Seq("a" -> s"$t-$r", s"k$r" -> t)),
+              Seq("k"), "p_date", numFiles = Some(1))
+          }
+        })
+      }
+      writers.foreach(_.get())
+    } finally pool.shutdown()
+    for (t <- tables) {
+      val got = store.read(spark, t).collect()
+        .map(r => r.getAs[String]("k") -> (r.getAs[String]("v"), r.getAs[Long]("nupdates"))).toMap
+      assert(got == ((1 to rounds).map(r => s"k$r" -> (t, 1L)).toMap + ("a" -> (s"$t-$rounds", rounds.toLong))))
+      assert(store.versionDepth(spark, t) == rounds, t)
+    }
+    val staging = {
+      val w = Files.walk(dir)
+      try w.iterator().asScala.filter(_.getFileName.toString.startsWith(".tmp-")).toList
+      finally w.close()
+    }
+    assert(staging.isEmpty, staging)
   }
 
   test("widenPartitioned: one-time sweep adds a column atomically; implicit widening still rejected") {

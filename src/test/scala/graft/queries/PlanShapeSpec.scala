@@ -231,11 +231,26 @@ class PlanShapeSpec extends SparkSpec {
     assert("WindowGroupLimit .*Final".r.unanchored.matches(p), p.take(1500))
   }
 
+  private def pagerankPlan(driverMaxEdges: Long): String = {
+    val s = spark; import s.implicits._
+    val pairs = AnalyticsQueries.copurchasePairs(spark, dir)
+      .select($"part_a".as("a"), $"part_b".as("b"))
+    graft.operators.Graph.rankPowerIteration(pairs, 3, personalized = false,
+      driverMaxEdges = driverMaxEdges).queryExecution.executedPlan.toString
+  }
+
   test("a16_pagerank: rank table broadcasts into every round; no cartesian against edges") {
-    val p = AnalyticsQueries.all("a16_pagerank")(spark, dir)
-      .queryExecution.executedPlan.toString
+    // driverMaxEdges = 0 forces the distributed branch, the plan every
+    // graph above the driver gate runs
+    val p = pagerankPlan(driverMaxEdges = 0)
     assert(p.contains("BroadcastHashJoin"), p.take(1500))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(1500))
+  }
+
+  test("a16_pagerank: below the driver gate the ranks are one local relation, no join") {
+    val p = pagerankPlan(driverMaxEdges = graft.operators.Graph.DriverMaxEdges)
+    assert(p.contains("LocalTableScan"), p.take(1500))
+    assert(!p.contains("Join"), p.take(1500))
   }
 
   test("x1_decontam_exact: gram overlap is an equi-join on fingerprints") {
