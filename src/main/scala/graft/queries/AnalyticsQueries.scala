@@ -2759,7 +2759,7 @@ object AnalyticsQueries {
   private def storedWeightedPriceCum(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/weighted-cum/v1/${graft.sources.Tables.fileKey(s, dir, "lineitem.parquet")}")
+      s"${Tables.TmpRoot}/weighted-cum/v1/${Tables.fileKey(s, dir, "lineitem.parquet")}")
     if (!store.exists(s, "cum")) {
       store.replace(s, "byprice", Tables.lineitem(s, dir)
         .select($"l_returnflag".as("flag"),
@@ -2926,7 +2926,7 @@ object AnalyticsQueries {
   private[queries] def copurchaseStore(s: SparkSession, dir: String): graft.operators.TableStore = {
     import s.implicits._
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/copurchase-pairs/v2/${graft.sources.Tables.fileKey(s, dir, "lineitem.parquet")}")
+      s"${Tables.TmpRoot}/copurchase-pairs/v2/${Tables.fileKey(s, dir, "lineitem.parquet")}")
     if (!store.exists(s, "pairs")) {
       val items = Tables.lineitem(s, dir)
         .select($"l_orderkey", $"l_partkey").distinct()

@@ -421,26 +421,26 @@ object CoreQueries {
   /** Fixed store root for the ETL flagship query: the Spark side wipes
     * and repopulates it each run, and the DuckDB oracle reads the same
     * parquet back (read_parquet over the partitioned dirs). */
-  private val EtlStorePath = "/root/repo/target/tmp/etl-oracle"
-  private val ArchiveStorePath = "/root/repo/target/tmp/etl-archive-oracle"
+  private val EtlStorePath = s"${Tables.TmpRoot}/etl-oracle"
+  private val ArchiveStorePath = s"${Tables.TmpRoot}/etl-archive-oracle"
 
   /** Fixed store root for the partitioned-upsert gate query (wiped per
     * run — the two-batch counter semantics need a fresh store). */
-  private val PartUpsertStorePath = "/root/repo/target/tmp/partupsert-oracle"
-  private val SqlMergeStorePath = "/root/repo/target/tmp/sqlmerge-oracle"
-  private val AppendStorePath = "/root/repo/target/tmp/append-oracle"
-  private val AppendCompactStorePath = "/root/repo/target/tmp/append-compact-oracle"
-  private val SqlDeleteStorePath = "/root/repo/target/tmp/sqldelete-oracle"
-  private val CheckedStorePath = "/root/repo/target/tmp/checked-oracle"
-  private val SqlUpdateStorePath = "/root/repo/target/tmp/sqlupdate-oracle"
-  private val DeleteStorePath = "/root/repo/target/tmp/delete-oracle"
-  private val MorStorePath = "/root/repo/target/tmp/mor-oracle"
-  private val MorPartStorePath = "/root/repo/target/tmp/mor-part-oracle"
-  private val UpdateStorePath = "/root/repo/target/tmp/update-oracle"
-  private val IncrAggStorePath = "/root/repo/target/tmp/incragg-oracle"
-  private val IvmRetractStorePath = "/root/repo/target/tmp/ivmretract-oracle"
-  private val IncrJoinStorePath = "/root/repo/target/tmp/incrjoin-oracle"
-  private val IvmJoinAggStorePath = "/root/repo/target/tmp/ivmjoinagg-oracle"
+  private val PartUpsertStorePath = s"${Tables.TmpRoot}/partupsert-oracle"
+  private val SqlMergeStorePath = s"${Tables.TmpRoot}/sqlmerge-oracle"
+  private val AppendStorePath = s"${Tables.TmpRoot}/append-oracle"
+  private val AppendCompactStorePath = s"${Tables.TmpRoot}/append-compact-oracle"
+  private val SqlDeleteStorePath = s"${Tables.TmpRoot}/sqldelete-oracle"
+  private val CheckedStorePath = s"${Tables.TmpRoot}/checked-oracle"
+  private val SqlUpdateStorePath = s"${Tables.TmpRoot}/sqlupdate-oracle"
+  private val DeleteStorePath = s"${Tables.TmpRoot}/delete-oracle"
+  private val MorStorePath = s"${Tables.TmpRoot}/mor-oracle"
+  private val MorPartStorePath = s"${Tables.TmpRoot}/mor-part-oracle"
+  private val UpdateStorePath = s"${Tables.TmpRoot}/update-oracle"
+  private val IncrAggStorePath = s"${Tables.TmpRoot}/incragg-oracle"
+  private val IvmRetractStorePath = s"${Tables.TmpRoot}/ivmretract-oracle"
+  private val IncrJoinStorePath = s"${Tables.TmpRoot}/incrjoin-oracle"
+  private val IvmJoinAggStorePath = s"${Tables.TmpRoot}/ivmjoinagg-oracle"
 
   // shared with t9_stream_ivm: the streamed IVM folds must serve the
   // identical one-shot join
@@ -499,7 +499,7 @@ object CoreQueries {
       |CAST(ROUND(c_acctbal * 100) AS BIGINT) AS acctbal_c
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |ORDER BY o_orderkey""".stripMargin
-  private val SketchStorePath = "/root/repo/target/tmp/sketch-store"
+  private val SketchStorePath = s"${Tables.TmpRoot}/sketch-store"
 
   // shared with t15_stream_retract: the streamed signed-delta folds
   // must serve the identical post-CDC recompute
@@ -514,7 +514,7 @@ object CoreQueries {
       |  SELECT o_custkey, cents FROM base WHERE o_orderkey % 83 = 0)
       |SELECT o_custkey, COUNT(*) AS n_orders, CAST(SUM(cents) AS BIGINT) AS cents
       |FROM post GROUP BY o_custkey ORDER BY o_custkey""".stripMargin
-  private val KllStorePath = "/root/repo/target/tmp/kll-store"
+  private val KllStorePath = s"${Tables.TmpRoot}/kll-store"
 
   val all: Map[String, Q] = Map(
     // ---- A3: partial+final hash aggregate (TPC-H Q1 shape) ----------
@@ -582,11 +582,11 @@ object CoreQueries {
       val key = Tables.fileKey(s, dir, "orders.parquet")
       val o = graft.operators.Bucketing.ensureBucketed(s, "graft_buck", s"orders_${key.replace("-", "_").replace(".", "_")}",
         Tables.orders(s, dir), Seq("o_orderkey"), 8,
-        s"/root/repo/target/tmp/buck/$key/orders_b")
+        s"${Tables.TmpRoot}/buck/$key/orders_b")
       val l = graft.operators.Bucketing.ensureBucketed(s, "graft_buck", s"lineitem_${key.replace("-", "_").replace(".", "_")}",
         Tables.lineitem(s, dir).select($"l_orderkey", $"l_extendedprice", $"l_discount"),
         Seq("l_orderkey"), 8,
-        s"/root/repo/target/tmp/buck/$key/lineitem_b")
+        s"${Tables.TmpRoot}/buck/$key/lineitem_b")
       s.table(o).hint("merge")
         .join(s.table(l), $"o_orderkey" === $"l_orderkey")
         .groupBy($"o_orderpriority")
@@ -1762,7 +1762,7 @@ object CoreQueries {
     // surviving-row state.
     "s13_sql_mor" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/mor-sql-store"
+      val path = s"${Tables.TmpRoot}/mor-sql-store"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path)
@@ -2136,7 +2136,7 @@ object CoreQueries {
     // layout step itself is row-loss/duplication-gated every round.
     "s9_zorder_scan" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/zorder-scan"
+      val path = s"${Tables.TmpRoot}/zorder-scan"
       val src = Tables.lineitem(s, dir)
         .select($"l_orderkey", $"l_partkey", $"l_quantity", $"l_extendedprice")
       graft.operators.Partitioning.zorderWrite(src, "l_orderkey", "l_partkey", path, numFiles = 16)
@@ -2158,7 +2158,7 @@ object CoreQueries {
     "s9_zonemap_scan" -> ((s, dir) => {
       import s.implicits._
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/zm-store/v1/${Tables.fileKey(s, dir, "lineitem.parquet")}")
+        s"${Tables.TmpRoot}/zm-store/v1/${Tables.fileKey(s, dir, "lineitem.parquet")}")
       if (!store.exists(s, "li_zm"))
         store.replaceZoneMapped(s, "li_zm", Tables.lineitem(s, dir),
           Seq("l_shipdate"), targetFiles = 16)
@@ -2184,7 +2184,7 @@ object CoreQueries {
     "s9_stats_skip" -> ((s, dir) => {
       import s.implicits._
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/statskip-store/v1/${Tables.fileKey(s, dir, "lineitem.parquet")}")
+        s"${Tables.TmpRoot}/statskip-store/v1/${Tables.fileKey(s, dir, "lineitem.parquet")}")
       if (!store.exists(s, "li_stats")) {
         store.declareStats(s, "li_stats", Seq("l_orderkey"))
         store.replace(s, "li_stats", Tables.lineitem(s, dir)
@@ -2221,7 +2221,7 @@ object CoreQueries {
     "s9_clustered_upserts" -> ((s, dir) => {
       import s.implicits._
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/cluster-store/v1/${Tables.fileKey(s, dir, "orders.parquet")}")
+        s"${Tables.TmpRoot}/cluster-store/v1/${Tables.fileKey(s, dir, "orders.parquet")}")
       if (!store.exists(s, "ords")) {
         store.declareStats(s, "ords", Seq("o_orderkey"))
         store.declareClustering(s, "ords", Seq("o_orderkey"), targetFiles = 8)
@@ -2263,7 +2263,7 @@ object CoreQueries {
     "s9_bloom_skip" -> ((s, dir) => {
       import s.implicits._
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/bloomskip-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}")
+        s"${Tables.TmpRoot}/bloomskip-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}")
       if (!store.exists(s, "doc_bloom")) {
         store.declareBlooms(s, "doc_bloom", Seq("doc_id"))
         store.replace(s, "doc_bloom", Tables.documents(s, dir)
@@ -2302,7 +2302,7 @@ object CoreQueries {
     "s9_meta_agg" -> ((s, dir) => {
       import s.implicits._
       val rootPath =
-        s"/root/repo/target/tmp/metaagg-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}"
+        s"${Tables.TmpRoot}/metaagg-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}"
       val store = new graft.operators.TableStore(rootPath)
       if (!store.exists(s, "doc_meta")) {
         store.declareStats(s, "doc_meta", Seq("doc_id", "n_chars", "lang"))
@@ -2338,7 +2338,7 @@ object CoreQueries {
     "s9_meta_agg_grouped" -> ((s, dir) => {
       import s.implicits._
       val rootPath =
-        s"/root/repo/target/tmp/metaagg-grp-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}"
+        s"${Tables.TmpRoot}/metaagg-grp-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}"
       val store = new graft.operators.TableStore(rootPath)
       if (!store.exists(s, "doc_days")) {
         store.declareStats(s, "doc_days", Seq("doc_id", "lang"))
@@ -2371,7 +2371,7 @@ object CoreQueries {
       import s.implicits._
       // same fixture as s9_meta_agg_grouped (build-once)
       val rootPath =
-        s"/root/repo/target/tmp/metaagg-grp-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}"
+        s"${Tables.TmpRoot}/metaagg-grp-store/v1/${Tables.fileKey(s, dir, "documents.parquet")}"
       val store = new graft.operators.TableStore(rootPath)
       if (!store.exists(s, "doc_days")) {
         store.declareStats(s, "doc_days", Seq("doc_id", "lang"))
@@ -2405,7 +2405,7 @@ object CoreQueries {
     "s9_bloom_scan" -> ((s, dir) => {
       import s.implicits._
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/bloom-store/v1/${Tables.fileKey(s, dir, "events.parquet")}")
+        s"${Tables.TmpRoot}/bloom-store/v1/${Tables.fileKey(s, dir, "events.parquet")}")
       if (!store.exists(s, "ev_bloom"))
         store.replaceZoneMapped(s, "ev_bloom",
           Tables.events(s, dir).select($"event_id", $"user_id", $"event_type", $"value"),
@@ -2429,7 +2429,7 @@ object CoreQueries {
     // ---- S10: CSV round-trip (generic file formats) --------------------------
     "s10_csv_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val tmp = s"/root/repo/target/tmp/s10_csv_${java.util.UUID.randomUUID().toString.take(8)}"
+      val tmp = s"${Tables.TmpRoot}/s10_csv_${java.util.UUID.randomUUID().toString.take(8)}"
       Tables.nation(s, dir)
         .select($"n_nationkey".cast("long").as("n_nationkey"), $"n_name", $"n_regionkey".cast("long").as("n_regionkey"))
         .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -2450,7 +2450,7 @@ object CoreQueries {
     // non-null backfill all break the hash.
     "s10_schema_evolution" -> ((s, dir) => {
       import s.implicits._
-      val tmp = s"/root/repo/target/tmp/s10_evo_${java.util.UUID.randomUUID().toString.take(8)}"
+      val tmp = s"${Tables.TmpRoot}/s10_evo_${java.util.UUID.randomUUID().toString.take(8)}"
       val n = Tables.nation(s, dir)
         .select($"n_nationkey".cast("long").as("n_nationkey"), $"n_name",
           $"n_regionkey".cast("long").as("n_regionkey"))
@@ -2471,7 +2471,7 @@ object CoreQueries {
     // roundtrip's fidelity is under test.
     "s10_orc_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val tmp = s"/root/repo/target/tmp/s10_orc_${java.util.UUID.randomUUID().toString.take(8)}"
+      val tmp = s"${Tables.TmpRoot}/s10_orc_${java.util.UUID.randomUUID().toString.take(8)}"
       Tables.orders(s, dir)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice", $"o_orderdate")
         .write.mode("overwrite").orc(tmp)
@@ -2484,7 +2484,7 @@ object CoreQueries {
     // ---- S10: JSON round-trip (schema-explicit read back) ---------------------
     "s10_json_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val tmp = s"/root/repo/target/tmp/s10_json_${java.util.UUID.randomUUID().toString.take(8)}"
+      val tmp = s"${Tables.TmpRoot}/s10_json_${java.util.UUID.randomUUID().toString.take(8)}"
       Tables.region(s, dir)
         .select($"r_regionkey".cast("long").as("r_regionkey"), $"r_name")
         .write.mode("overwrite").json(tmp)

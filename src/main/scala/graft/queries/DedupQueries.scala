@@ -37,7 +37,7 @@ object DedupQueries {
     * or a stale artifact would silently serve oracle-gated queries. */
   private[queries] def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/neardup-pairs/v1/${docsKey(s, dir)}")
+      s"${Tables.TmpRoot}/neardup-pairs/v1/${docsKey(s, dir)}")
     if (!store.exists(s, "pairs"))
       store.replace(s, "pairs",
         Dedup.prefixFilteredNgram(Tables.documents(s, dir), "doc_id", "text", n = 3))
@@ -54,7 +54,7 @@ object DedupQueries {
     * prefix filter) semantics. */
   private def tfidfPairs(s: SparkSession, dir: String): DataFrame = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/tfidf-pairs/v1/${docsKey(s, dir)}")
+      s"${Tables.TmpRoot}/tfidf-pairs/v1/${docsKey(s, dir)}")
     if (!store.exists(s, "weights"))
       store.replace(s, "weights",
         graft.operators.TfIdf.weights(Tables.documents(s, dir), "doc_id", "text", n = 3))
@@ -86,7 +86,7 @@ object DedupQueries {
   }
 
   private[queries] def trainGramStorePath(s: SparkSession, dir: String): String =
-    s"/root/repo/target/tmp/train-grams/v1/${docsKey(s, dir)}"
+    s"${Tables.TmpRoot}/train-grams/v1/${docsKey(s, dir)}"
 
   /** Containment (doc-inside-doc) pair set — same materialize-once
     * pattern as `nearDupPairs`, separate artifact (different
@@ -95,7 +95,7 @@ object DedupQueries {
     * per corpus version instead of per consumer is the point. */
   private def containmentPairStore(s: SparkSession, dir: String): DataFrame = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/containment-pairs/v1/${docsKey(s, dir)}")
+      s"${Tables.TmpRoot}/containment-pairs/v1/${docsKey(s, dir)}")
     if (!store.exists(s, "pairs"))
       store.replace(s, "pairs",
         Dedup.containmentPairs(Tables.documents(s, dir), "doc_id", "text",
@@ -116,7 +116,7 @@ object DedupQueries {
     val docs = Tables.documents(s, dir)
     val emb = Tables.embeddings(s, dir)
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/erasure-cascade/v2/${docsKey(s, dir)}")
+      s"${Tables.TmpRoot}/erasure-cascade/v2/${docsKey(s, dir)}")
     if (!store.exists(s, "corpus_fp")) {
       graft.operators.TextIndex.build(docs, "doc_id", "text", store, "kw")
       graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
@@ -630,7 +630,7 @@ object DedupQueries {
     // double-applied, or a status flipped breaks the hash.
     "x1_erasure_ledger" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/erasure-ledger"
+      val path = s"${Tables.TmpRoot}/erasure-ledger"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path)
@@ -1157,7 +1157,7 @@ object DedupQueries {
     * v1 = (brand × length-band blocking, levenshtein cap 2). */
   private[queries] def editPairs(s: SparkSession, dir: String): DataFrame = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/edit-pairs/v1/${Tables.fileKey(s, dir, "part.parquet")}")
+      s"${Tables.TmpRoot}/edit-pairs/v1/${Tables.fileKey(s, dir, "part.parquet")}")
     if (!store.exists(s, "pairs2")) {
       val p = Tables.part(s, dir)
         .select(col("p_partkey"), col("p_brand"), col("p_name"),
@@ -1217,7 +1217,7 @@ object DedupQueries {
         |FROM agg JOIN canon USING (cluster)
         |ORDER BY entity_id""".stripMargin
 
-  private val FpStorePath = "/root/repo/target/tmp/fp-store"
+  private val FpStorePath = s"${Tables.TmpRoot}/fp-store"
 
   /** Shared oracle text: the (brand, first-char, size±1)-blocked
     * Fellegi–Sunter fixture candidates with the 3-bit comparison vector

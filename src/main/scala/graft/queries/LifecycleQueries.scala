@@ -495,7 +495,7 @@ object LifecycleQueries {
     // exactly the programmatic time-travel snapshot.
     "s13_sql_version" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/timetravel-sql"
+      val path = s"${Tables.TmpRoot}/timetravel-sql"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path, retain = 2)
@@ -614,7 +614,7 @@ object LifecycleQueries {
     // text: the wall-clock read must equal the ordinal one.
     "s13_sql_timestamp" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/timetravel-ts"
+      val path = s"${Tables.TmpRoot}/timetravel-ts"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path, retain = 2)
@@ -656,7 +656,7 @@ object LifecycleQueries {
     // diff, a double-applied diff, or a mishandled D breaks the hash.
     "s13_cdc_sync" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/cdc-sync"
+      val path = s"${Tables.TmpRoot}/cdc-sync"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(s"$path/src", retain = 2)
@@ -695,7 +695,7 @@ object LifecycleQueries {
     // s13_cdc_sync: one contract, two routings.
     "s13_cdc_sync_part" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/cdc-sync-part"
+      val path = s"${Tables.TmpRoot}/cdc-sync-part"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(s"$path/src", retain = 2)
@@ -751,7 +751,7 @@ object LifecycleQueries {
     // table dir (raw recursive scan, no DV applied).
     "s13_purge_history" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/purge-history"
+      val path = s"${Tables.TmpRoot}/purge-history"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path, retain = 2)
@@ -797,7 +797,7 @@ object LifecycleQueries {
     // outright, and a stale pin that leaked b3 breaks the hash.
     "s13_snapshot_tag" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/snapshot-tag"
+      val path = s"${Tables.TmpRoot}/snapshot-tag"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path) // retain = 0
@@ -832,7 +832,7 @@ object LifecycleQueries {
     // — one text, programmatic and SQL APIs.
     "s13_sql_tag" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/snapshot-tag-sql"
+      val path = s"${Tables.TmpRoot}/snapshot-tag-sql"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path)
@@ -898,7 +898,7 @@ object LifecycleQueries {
     // changesBetween(1) feed — SAME oracle text as s13_changefeed.
     "s13_changes_since" -> ((s, dir) => {
       import s.implicits._
-      val path = "/root/repo/target/tmp/changes-since"
+      val path = s"${Tables.TmpRoot}/changes-since"
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
       val store = new graft.operators.TableStore(path, retain = 2)
@@ -922,7 +922,7 @@ object LifecycleQueries {
     })
   )
 
-  private val TimeTravelStorePath = "/root/repo/target/tmp/timetravel-oracle"
+  private val TimeTravelStorePath = s"${Tables.TmpRoot}/timetravel-oracle"
 
   /** One text, two read APIs: the programmatic `readVersionsBack` gate
     * and the SQL `VERSION AS OF` gate replay the same b1+b2 state. */
@@ -941,9 +941,9 @@ object LifecycleQueries {
       |            ELSE 1 END AS BIGINT) AS nupdates
       |FROM b1 t FULL OUTER JOIN b2 u ON t.o_orderkey = u.o_orderkey
       |ORDER BY o_orderkey""".stripMargin
-  private val ChangefeedStorePath = "/root/repo/target/tmp/changefeed-oracle"
-  private val RestoreStorePath = "/root/repo/target/tmp/restore-sql"
-  private val RestorePartStorePath = "/root/repo/target/tmp/restore-part"
+  private val ChangefeedStorePath = s"${Tables.TmpRoot}/changefeed-oracle"
+  private val RestoreStorePath = s"${Tables.TmpRoot}/restore-sql"
+  private val RestorePartStorePath = s"${Tables.TmpRoot}/restore-part"
 
   /** One text, two feed addressings: the ordinal changesBetween(1)
     * gate and the wall-clock changesSince gate replay the identical

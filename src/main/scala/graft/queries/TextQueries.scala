@@ -25,7 +25,7 @@ object TextQueries {
     * layout change or a stale index poisons oracle-gated probes. */
   private def kwIndex(s: SparkSession, dir: String): graft.operators.TableStore = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/text-index/v4/${docsKey(s, dir)}")
+      s"${Tables.TmpRoot}/text-index/v4/${docsKey(s, dir)}")
     if (!store.exists(s, "kw_postings"))
       graft.operators.TextIndex.build(Tables.documents(s, dir), "doc_id", "text", store, "kw")
     store
@@ -160,7 +160,7 @@ object TextQueries {
     // no-op (returns 0), so bench passes don't re-delete.
     "x3_search_erasure" -> ((s, dir) => {
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/text-index-erase/v1/${docsKey(s, dir)}")
+        s"${Tables.TmpRoot}/text-index-erase/v1/${docsKey(s, dir)}")
       if (!store.exists(s, "kw_postings"))
         graft.operators.TextIndex.build(
           Tables.documents(s, dir), "doc_id", "text", store, "kw")
@@ -460,7 +460,7 @@ object TextQueries {
     // or stale stats would all shift scores and break the hash.
     "x3_index_incremental" -> ((s, dir) => {
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/text-index-incr/v3/${docsKey(s, dir)}")
+        s"${Tables.TmpRoot}/text-index-incr/v3/${docsKey(s, dir)}")
       // the warm-skip guard keys on kw_segs — the table fold() commits
       // LAST — not just the base build's kw_postings: a crash between
       // build() and fold() would otherwise leave an even-half-only

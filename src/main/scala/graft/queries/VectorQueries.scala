@@ -38,7 +38,7 @@ object VectorQueries {
       // would silently serve a now-oracle-gated query; indexKey guards
       // against regenerated data
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ann-index/v3/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ann-index/v3/${indexKey(s, dir)}")
       if (!store.exists(s, "ann_buckets") || !store.exists(s, "ann_meta"))
         Ann.buildIndex(emb, "vec_id", "embedding", store, "ann")
       Ann.probeTopK(emb, "vec_id", "embedding", store, "ann", queryId = 0L, k = 10)
@@ -62,7 +62,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ann-index/v3/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ann-index/v3/${indexKey(s, dir)}")
       if (!store.exists(s, "ann_buckets") || !store.exists(s, "ann_meta"))
         Ann.buildIndex(emb, "vec_id", "embedding", store, "ann")
       Ann.probeTopKBatch(emb, "vec_id", "embedding", store, "ann",
@@ -85,7 +85,7 @@ object VectorQueries {
       // v3 = cid-partitioned postings (v2 flat; v1 trained without the
       // probe vector); indexKey guards against regenerated data
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ivf-index/v3/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ivf-index/v3/${indexKey(s, dir)}")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       graft.operators.Ivf.probeTopK(s, store, "ivf",
@@ -117,7 +117,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ivf-scal/v2/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ivf-scal/v2/${indexKey(s, dir)}")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndexScalable(
           emb, "vec_id", "embedding", store, "ivf", iters = 6)
@@ -147,7 +147,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ivf-index/v3/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ivf-index/v3/${indexKey(s, dir)}")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       val queries = emb.filter(col("vec_id") < 5)
@@ -177,7 +177,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ivf-fold/v2/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ivf-fold/v2/${indexKey(s, dir)}")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings")) {
         graft.operators.Ivf.buildIndex(
           emb.filter(col("vec_id") % 10 =!= 9), "vec_id", "embedding", store, "ivf")
@@ -212,7 +212,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ivf-delete/v1/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ivf-delete/v1/${indexKey(s, dir)}")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       graft.operators.Ivf.remove(s, store, "ivf",
@@ -244,7 +244,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/ivf-index/v3/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/ivf-index/v3/${indexKey(s, dir)}")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       // finer 16-code (4-bit) codebook than the oracle-pinned K=4 one:
@@ -699,7 +699,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/mips-index/v1/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/mips-index/v1/${indexKey(s, dir)}")
       graft.operators.Mips.indexedTopK(s, emb, "vec_id", "embedding",
         store, "mips", queryId = 0L, k = 10)
     }),
@@ -717,7 +717,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/mips-index/v1/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/mips-index/v1/${indexKey(s, dir)}")
       if (!store.exists(s, "mips_centroids") || !store.exists(s, "mips_postings"))
         graft.operators.Ivf.buildIndex(
           graft.operators.Mips.augment(emb, "vec_id", "embedding"),
@@ -760,7 +760,7 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       val store = new graft.operators.TableStore(
-        s"/root/repo/target/tmp/label-part/v1/${indexKey(s, dir)}")
+        s"${Tables.TmpRoot}/label-part/v1/${indexKey(s, dir)}")
       if (!store.exists(s, "flt_postings"))
         store.replacePartitions(s, "flt_postings",
           emb.repartition(col("label")), "label")
@@ -1061,7 +1061,7 @@ object VectorQueries {
   private def fittedCentroids(s: SparkSession, dir: String,
       emb: DataFrame): Array[Array[Long]] = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/kmeans-model/v1/${indexKey(s, dir)}")
+      s"${Tables.TmpRoot}/kmeans-model/v1/${indexKey(s, dir)}")
     if (store.exists(s, "centroids")) {
       val rows = store.read(s, "centroids").collect()
       val k = rows.map(_.getLong(0)).max.toInt + 1
@@ -1087,7 +1087,7 @@ object VectorQueries {
       emb: DataFrame, k: Int = graft.operators.Pq.K): Array[Array[Array[Long]]] = {
     import graft.operators.Pq
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/pq-model/v1-k$k/${indexKey(s, dir)}")
+      s"${Tables.TmpRoot}/pq-model/v1-k$k/${indexKey(s, dir)}")
     val books = Array.ofDim[Long](Pq.M, k, Pq.subDim)
     if (store.exists(s, "codebook")) {
       store.read(s, "codebook").collect().foreach(r =>
@@ -1115,7 +1115,7 @@ object VectorQueries {
       k: Int = graft.operators.Pq.K): (DataFrame, Array[Array[Array[Long]]]) = {
     val books = fittedBooks(s, dir, emb, k)
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/pq-model/v1-k$k/${indexKey(s, dir)}")
+      s"${Tables.TmpRoot}/pq-model/v1-k$k/${indexKey(s, dir)}")
     if (!store.exists(s, "pq_codes"))
       store.replace(s, "pq_codes",
         graft.operators.Pq.encode(emb, "vec_id", "embedding", books))
@@ -1145,7 +1145,7 @@ object VectorQueries {
   private[queries] def storedSqCodes(s: SparkSession, dir: String,
       emb: DataFrame): DataFrame = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/sq-codes/v1/${indexKey(s, dir)}")
+      s"${Tables.TmpRoot}/sq-codes/v1/${indexKey(s, dir)}")
     if (!store.exists(s, "sq_codes"))
       store.replace(s, "sq_codes", sqEncode(emb))
     store.read(s, "sq_codes")
@@ -1169,7 +1169,7 @@ object VectorQueries {
   private[queries] def storedBqCodes(s: SparkSession, dir: String,
       emb: DataFrame): DataFrame = {
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/bq-codes/v1/${indexKey(s, dir)}")
+      s"${Tables.TmpRoot}/bq-codes/v1/${indexKey(s, dir)}")
     if (!store.exists(s, "bq_codes"))
       store.replace(s, "bq_codes", bqEncode(emb))
     store.read(s, "bq_codes")

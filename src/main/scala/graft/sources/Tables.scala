@@ -17,6 +17,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Root of every build-once artifact store and streamed-gate run dir
+    * the library keeps on disk. The one store-root literal in the main
+    * tree; the benchmark build (perfbench/build.sbt) rewrites it so each
+    * benchmark run starts from an empty root. */
+  val TmpRoot = "/root/repo/target/tmp"
+
   /** Cache key for persisted per-corpus artifacts (pair stores, text/
     * vector indexes): sf dir name + a fingerprint (length ⊕ mtime) of
     * the backing file. ONE shared convention — if the fingerprint

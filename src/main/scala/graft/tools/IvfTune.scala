@@ -24,7 +24,7 @@ object IvfTune {
         .select(col("vec_id"), Functions.cosine(col("embedding"), col("qv")).as("sim"))
         .orderBy(col("sim").desc, col("vec_id")).limit(10)
         .collect().map(_.getLong(0)).toSet
-      val store = new TableStore(s"/root/repo/target/tmp/ivf-tune/$sf")
+      val store = new TableStore(s"${Tables.TmpRoot}/ivf-tune/$sf")
       if (!store.exists(spark, "ivf_centroids"))
         Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       for (np <- Seq(8, 10, 12, 14, 16)) {

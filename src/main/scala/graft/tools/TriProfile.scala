@@ -20,7 +20,7 @@ object TriProfile {
       println(f"[tri] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
     }
     val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/copurchase-pairs/v2/${graft.sources.Tables.fileKey(spark, dir, "lineitem.parquet")}")
+      s"${graft.sources.Tables.TmpRoot}/copurchase-pairs/v2/${graft.sources.Tables.fileKey(spark, dir, "lineitem.parquet")}")
     val pairs = store.read(spark, "pairs").select("part_a", "part_b")
     time("pairs count")(println(pairs.count()))
     val deg = pairs.select(col("part_a").as("n")).union(pairs.select(col("part_b").as("n")))
