@@ -1,29 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions) // native fns + SQL MERGE parser
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the 4.1 checkpoint checksum layer serializes state-store
-      // commits; this driver's checkpoints are transient tmp-dir
-      // coordination state, so the local measurement drivers run it
-      // OFF (GraftSession, the production entry point, keeps it ON —
-      // see the rationale there). Same env override everywhere, so
-      // the A/B is one flag and Verify measures the same config.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // raw file:// AbstractFileSystem for the FileContext checkpoint
-      // path — see GraftSession (scheme-scoped: local mode only)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FC",
-          "org.apache.hadoop.fs.local.RawLocalFs"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     // noop sink: full query execution incl. every output column
     // (count() would let Catalyst prune map-only projections away),
     // without paying file-write I/O. Two timed passes; each query
@@ -53,93 +32,10 @@ object Bench {
     // dev iteration; the driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    // Warm-store audit (VERDICT r8 wrong #3): if the build-once /
-    // probe-many contract holds, pass 1 may build (cold environment)
-    // but pass 2 must be all hits — a pass-2 miss means a fingerprint
-    // churned mid-run and a "warm" store silently rebuilt, which would
-    // masquerade as uniform drift. Reported per pass on stderr and in
-    // target/bench.json.
-    //
-    // MEASURED (r9, sf0.1): pass-1 and pass-2 miss sets are IDENTICAL
-    // (54 paths), and every one is either (a) a store the query
-    // deletes at start by design — the end-to-end DML fixtures
-    // (*-oracle/*) and the streamed replay run dirs (stream-*/run/
-    // store/*) — or (b) a negative existence check that is a valid
-    // steady state (e.g. bm25Search probing for optional fold
-    // segments on a segment-less index). No warm index/pair/model
-    // store (ann/ivf/pq/sq/kmeans/copurchase/pairs/text-index base)
-    // misses in either pass: the build-once contract HOLDS, so r8's
-    // uniform +20-31% drift on unchanged queries was environment/JVM
-    // pressure, not fingerprint churn — corroborated by r9's total
-    // staying flat vs r8 while adding queries.
-    // a17_clustering_coeff drift audit (VERDICT r9 next #8): re-plan
-    // audited r10 — the oriented wedge frame still materializes
-    // exactly once (orientedTriangles' localCheckpoint(true)), no
-    // exchange reuse lost; re-measured 1.48 s at sf0.1 between r8's
-    // 0.97 and r9's 1.84. For a query whose execute leg is ONE
-    // wedge-join stage, that spread is the box's documented ±35%
-    // min-of-two variance, i.e. bench noise, not a plan defect.
-    //
-    // a17_triangles drift audit (VERDICT r10 wrong #2): r11 stage
-    // profiling (tools/TriProfile, sf0.1: 1.196M edges / 20k nodes /
-    // 41.09M wedges) found TWO real inefficiencies plus noise: (a) the
-    // closing semi-join shuffled+sorted the 41M-row wedge frame — the
-    // m-row edge list (28 MB) sat just above the 10 MB auto-broadcast
-    // line; a size-gated broadcast() (count is free on the checkpoint)
-    // keeps wedges STREAMING through two hash joins (measured: the
-    // triangle count alone 5.39 → 4.09 s); (b) the graph-card legs
-    // re-scanned the raw pair store — now derived from the same
-    // checkpointed oriented frame. Re-measured min-of-two at sf0.1:
-    // 5.55 / 6.52 / 7.83 s across three runs (pre-fix 6.08–6.72) —
-    // best-case back near r9's 4.70 + the card legs; the residual
-    // spread is the same ±35% box variance the clustering-coeff audit
-    // documented, on a 41M-row enumeration floor (~1.8 s measured)
-    // that only DOULION (a17_triangles_approx) undercuts.
-    // x4_media_features (same audit): plan unchanged since r7
-    // (one batched mapPartitions decode pass, payloads never shuffle);
-    // re-measured 2.31/2.42/2.78 s vs r10's 2.87 — a JDK-codec
-    // CPU-bound execute in the same variance class, not a plan defect.
-    //
-    // r12 box-drift audit (VERDICT r11 wrong #3 + this round's full
-    // run looking +140 s over r11): PAIRED A/B on the same box, same
-    // subset, r11 commit (a00610a) vs HEAD, back to back —
-    //   r11 code:  t16 23.3  t3_outer 12.5  t22 6.2  cdc_sync 6.6  t24 9.6
-    //   HEAD:      t16 19.5  t3_outer  8.5  t22 5.8  cdc_sync 5.5  t24 8.3
-    // i.e. the r11 COMMIT re-measured far above ITS OWN recorded
-    // numbers (t16 15.5, t3_outer 8.9 in BENCH_r11) while HEAD beat it
-    // on every query — the inflation is the box, the code delta is a
-    // small WIN (the reference-diff-pruned changesBetween shows up in
-    // cdc_sync/t24). Streamed-gate wall time is trigger-scheduling
-    // dominated and swings up to 2x with background load
-    // (t3_stream_join_outer: 8.5 vs 19.2 s across two HEAD runs 40 min
-    // apart, zero code change) — only paired same-box deltas are
-    // meaningful for the streamed-replay query class.
-    // sql_inactive_rich / sql_important_parts (r11 watch): 1.11 /
-    // 1.21 s this round (r11: 1.28 / 1.15; r10: 0.80 / 0.82) — inside
-    // the documented one-stage variance band both rounds, no code in
-    // their path changed in either; recorded as noise per the
-    // a17_clustering_coeff discipline.
-    // r13 x4_audio_features watch (VERDICT r12 wrong #2): PAIRED A/B,
-    // same box, back to back — r12 commit (801f25f): audio 1.368,
-    // media 1.975; r13 HEAD: audio 1.423, media 1.640. The 2.24 s mode
-    // BENCH_r12 recorded did NOT reproduce under pairing on either
-    // commit — bimodality is the box (JDK codec path CPU contention),
-    // not a plan or batching defect; watch closed. Builder-side full
-    // r13 bench note: that run deliberately overlapped isolated
-    // spec runs on the same box (validation pipelining), median
-    // inflation 1.086 uniform across untouched families — measurement
-    // contention, not code; the driver's own BENCH_r13 runs clean.
-    // r13 END-OF-ROUND full run (median 1.156 vs the BENCH_r12 tail):
-    // PAIRED A/B on the eight biggest apparent regressors
-    // (heavy_hitters, json_events, pii_redact, bfs_levels, mkt_share,
-    // winsorize, kmeans, components), r12 commit (801f25f) vs HEAD,
-    // same box, back to back — r12 code 13.479 s, HEAD 13.473 s,
-    // per-query deltas mixed within noise; the r12 COMMIT itself
-    // re-measured well above its own recorded numbers (heavy_hitters
-    // 0.34 recorded → 0.50 re-measured, bfs_levels 1.26 → 1.78).
-    // The full-run inflation is the box; the r13 code delta is
-    // neutral-to-positive (s9 family faster, x4_audio_features back
-    // to 1.04 s — the r12 "2.24 s mode" watch resolved as box-modal).
+    // Store audit: pass 1 may build stores (cold environment), but a
+    // pass-2 miss on a build-once store means a fingerprint churned
+    // mid-run and a "warm" store silently rebuilt. Reported per pass on
+    // stderr and in target/bench.json.
     graft.operators.StoreStats.reset()
     val pass1 = queries.map { case (name, fn) => name -> run(name, fn) }
     val (h1, m1) = graft.operators.StoreStats.snapshot()
@@ -165,22 +61,17 @@ object Bench {
       }
       .mkString("{", ",", "}")
     val total = results.values.filter(_._1 >= 0).map(v => v._1 + v._2).sum
-    // The driver captures a bounded stdout TAIL: a full-precision line
-    // with both maps (~8 KB at 150 queries) gets its head truncated and
-    // parses as null (VERDICT r3 #8, r6 #4). Two artifacts instead:
-    //  - stdout: ONE compact line (3-decimal times, no construct map,
-    //    ~3.5 KB) printed LAST so the tail holds it entirely;
+    // Callers parse a bounded stdout tail, so two artifacts:
+    //  - stdout: a compact line (3-decimal times, no construct map),
+    //    then a tiny total-only line printed LAST so the tail holds it;
     //  - target/bench.json: the full-precision line incl. per-query
-    //    construct times, for plan-audit archaeology.
-    // Per-pass miss SETS and their symmetric difference, machine-
-    // checkable in bench.json (VERDICT r10 wrong #3: sums alone let the
-    // r9 "identical or explained" invariant quietly weaken). EXPECTED
-    // p1-only misses: first-touch existence probes of fixtures a query
-    // CREATES on pass 1 and then finds warm on pass 2 — the `_dels`
-    // erasure tombstones, restore/DML `*-oracle` fixtures, streamed run
-    // dirs. EXPECTED p2-only misses: none. Anything else in p1_only /
-    // p2_only is a churned fingerprint (a "warm" store silently
-    // rebuilding) and must be root-caused, not averaged away.
+    //    construct times and the per-pass store-miss sets.
+    // EXPECTED pass-1-only misses: first-touch existence probes of
+    // fixtures a query CREATES on pass 1 and finds warm on pass 2 — the
+    // `_dels` erasure tombstones, restore/DML `*-oracle` fixtures,
+    // streamed run dirs. EXPECTED pass-2-only misses: none. Anything
+    // else in p1_only / p2_only is a churned fingerprint and must be
+    // root-caused, not averaged away.
     def jset(s: Iterable[String]) =
       s.toSeq.sorted.map(p => "\"" + p.replace("\"", "") + "\"").mkString("[", ",", "]")
     val missDiff = s""""store_miss_p1_only":${jset(m1.keySet -- m2.keySet)},"store_miss_p2_only":${jset(m2.keySet -- m1.keySet)},"store_miss_both":${(m1.keySet intersect m2.keySet).size}"""
@@ -189,12 +80,8 @@ object Bench {
     java.nio.file.Files.writeString(java.nio.file.Paths.get("target/bench.json"), full + "\n")
     val line = s"""{"metric":"total","value":${BigDecimal(total).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"unit":"sec","queries":${jmap(v => v._1 + v._2, 3)},"sf":"$sfDir"}"""
     println(line)
-    // The compact map line above has outgrown the driver's ~2 KB stdout
-    // tail (~5 KB at 239 queries), so four rounds of BENCH_r*.json parsed
-    // as null (VERDICT r7 missing #1). The LAST line must therefore be
-    // tiny and self-contained: a total-only summary (~90 bytes) that
-    // always fits the tail whole. Per-query detail stays one line up and
-    // in target/bench.json.
+    // The compact map line outgrows the tail (~5 KB at 239 queries),
+    // so the LAST line is a total-only summary (~90 bytes).
     val nFailed = results.values.count(_._1 < 0)
     val tiny = s"""{"metric":"total","value":${BigDecimal(total).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"sf":"$sfDir"}"""
     println(tiny)

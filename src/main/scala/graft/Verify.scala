@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,26 +9,7 @@ object Verify {
     // comma-separated query names to restrict the dump to.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions) // native fns + SQL MERGE parser
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // checkpoint checksum layer off in the LOCAL measurement drivers
-      // only (transient tmp-dir checkpoints; GraftSession keeps it ON
-      // — see the rationale there). Same confs as Bench, so the
-      // correctness run covers the timed config.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // raw file:// AbstractFileSystem for the FileContext checkpoint
-      // path — see GraftSession (scheme-scoped: local mode only)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FC",
-          "org.apache.hadoop.fs.local.RawLocalFs"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

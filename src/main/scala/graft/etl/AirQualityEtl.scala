@@ -6,7 +6,6 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.NormalizeText
 import graft.sources.Html
-import graft.sources.Html.Cell
 
 /** The air-quality report ETL (SURVEY §7 Phase 1) — the reference's
   * whole pipeline (/root/reference/scrapper.py:130-186) re-expressed as

@@ -1,8 +1,6 @@
 package graft.operators
 
-import scala.util.Random
-
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Functions.{cosine, dotd}

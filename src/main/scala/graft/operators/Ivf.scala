@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Functions.{cosine, dotd}
+import graft.functions.Functions.cosine
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the
   * clustering counterpart to Ann's hyperplane LSH (north-star X2).

@@ -65,25 +65,6 @@ object Kmeans {
         array_min(col("dists")).as("d2"))
   }
 
-  /** `assign` plus the assignment-AMBIGUITY margin: d2 to the
-    * second-nearest centroid minus d2 to the nearest (0 on a tie).
-    * The quantizer-QA signal behind single-probe ANN recall — a
-    * vector with a small margin sits near a cell boundary, and its
-    * true neighbors spill into the runner-up cell. Same shape as
-    * `assign`: literal centroids, one scan-local projection per row,
-    * zero shuffle/join at any corpus size. */
-  def assignWithMargin(emb: DataFrame, idCol: String, vecCol: String,
-      cents: Array[Array[Long]]): DataFrame = {
-    val x6 = scaledVec(col(vecCol))
-    val dists = array(cents.toIndexedSeq.map(c => d2Lit(x6, c.toIndexedSeq)): _*)
-    val sorted = array_sort(col("dists"))
-    emb.select(col(idCol).cast("long").as("id"), dists.as("dists"))
-      .select(col("id"),
-        (array_position(col("dists"), array_min(col("dists"))) - 1L).as("cid"),
-        element_at(sorted, 1).as("d2"),
-        (element_at(sorted, 2) - element_at(sorted, 1)).as("margin"))
-  }
-
   /** `iters` Lloyd rounds from deterministic seeds (the vectors with
     * the k smallest ids). Returns the final centroids as scaled
     * longs, cid order = seed id order. An emptied cluster keeps its

@@ -227,7 +227,7 @@ object Percentiles {
         max(when(col("r").cast("double") === floor(position), col("v"))).as("_lo0"),
         max(when(col("r").cast("double") === ceil(position), col("v"))).as("_hi0"),
         max(col("n")).as("_n"))
-    val medDf = interpOne(med, g, names._1).select(g :+ col(names._1): _*)
+    val medDf = interpOne(med, names._1).select(g :+ col(names._1): _*)
     // window minimax: candidate left edges explode to the (≤2) median
     // offsets of the deviation rank; the partner row at rank r+p
     // arrives via the equi-join on (group, rp)
@@ -247,13 +247,13 @@ object Percentiles {
         min(when(col("p") === pHi, col("d"))).as("_hi0"),
         max(col("n")).as("_n"),
         max(col(names._1)).as(names._1))
-    interpOne(mad, g, names._2)
+    interpOne(mad, names._2)
       .select(g :+ col(names._1) :+ col(names._2): _*)
   }
 
   /** restoreAndInterpolate's p=0.5 interpolation tree over one
     * `_lo0`/`_hi0`/`_n` triple, appended as `name`. */
-  private def interpOne(agged: DataFrame, g: Seq[Column], name: String): DataFrame = {
+  private def interpOne(agged: DataFrame, name: String): DataFrame = {
     val position = (col("_n") - 1).cast("double") * lit(0.5)
     val lower = floor(position)
     val higher = ceil(position)

@@ -1390,11 +1390,6 @@ final class TableStore(val root: String, val retain: Int = 0) {
 
   private def replicasPath(name: String): Path = new Path(s"$root/$name/_replicas")
 
-  /** Registered replicas of `name`: (dst root, dst table, last-synced
-    * upstream commit identity — "-" = never synced). */
-  def replicaStatus(spark: SparkSession, name: String): Seq[(String, String, String)] =
-    replicaLines(fs(spark), name)
-
   private def replicaLines(f: FileSystem, name: String): Seq[(String, String, String)] = {
     val p = replicasPath(name)
     if (!f.exists(p)) Seq.empty
@@ -1935,14 +1930,6 @@ final class TableStore(val root: String, val retain: Int = 0) {
     partitionedLeafPaths(spark, name).getOrElse(Seq.empty)
       .map(_.split('/').dropRight(1).last.stripPrefix("_ab=").toInt)
       .filter(ab => lo.forall(ab > _) && ab <= hi).sorted
-
-  /** Steps-back position of a version id in the retained whole-table
-    * chain (0 = head). None = not retained — purged, or retention
-    * shorter than the caller's poll interval. */
-  def positionOfVersion(spark: SparkSession, name: String, versionId: String): Option[Int] = {
-    val idx = versionChain(fs(spark), name).indexOf(versionId)
-    if (idx < 0) None else Some(idx)
-  }
 
   /** Content digest of one partitioned STATE (map + DV lines): stable
     * across history shifts — unlike `commitIdentity`, whose full-line
@@ -3084,8 +3071,8 @@ final class TableStore(val root: String, val retain: Int = 0) {
     * `declareStats` auto-stats commit path. */
   private def statsPass(spark: SparkSession, tmp: Path, statCols: Seq[String],
       bloomCols: Seq[String] = Nil, bloomExpectedPerFile: Long = 1L << 16,
-      hashBloomCols: Seq[(String, Long)] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
+      hashBloomCols: Seq[(String, Long)],
+      schema: Option[org.apache.spark.sql.types.StructType]): Unit = {
     // the staged dir was just written from a known frame: its schema
     // skips the footer-inference job when the caller passes it
     val rd = spark.read

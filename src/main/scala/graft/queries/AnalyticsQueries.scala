@@ -3023,7 +3023,7 @@ object AnalyticsQueries {
     java.util.Arrays.fill(table, -1L)
     val mask = cap - 1
     def slot(key: Long): Int = {
-      var h = (key * -7046029254386353131L) >>> 40 // fibonacci-style mix
+      val h = (key * -7046029254386353131L) >>> 40 // fibonacci-style mix
       var s0 = (h.toInt & mask)
       while (table(s0) != -1L && table(s0) != key) s0 = (s0 + 1) & mask
       s0

@@ -2527,7 +2527,7 @@ object CoreQueries {
     // Spark side just wrote and re-derive the same current-air answer —
     // hash-checking the whole scrape→normalize→upsert→query chain, not
     // just rows>0.
-    "etl_current_air" -> ((s, dir) => {
+    "etl_current_air" -> ((s, _) => {
       import s.implicits._
       val html = {
         val in = getClass.getResourceAsStream("/fixtures/report_sample.html")
@@ -2555,7 +2555,7 @@ object CoreQueries {
     // itself is pinned by AirQualityEtlSpec's archive == single-page
     // equivalence; DuckDB can't parse HTML, so the store is the
     // cross-engine hand-off point, same trick as etl_current_air).
-    "etl_archive_scan" -> ((s, dir) => {
+    "etl_archive_scan" -> ((s, _) => {
       import s.implicits._
       val html = {
         val in = getClass.getResourceAsStream("/fixtures/report_sample.html")

@@ -104,6 +104,9 @@ object DedupQueries {
   }
 
 
+  private[graft] def cascadeStore(s: SparkSession, dir: String) =
+    new graft.operators.TableStore(s"${Tables.TmpRoot}/erasure-cascade/v2/${docsKey(s, dir)}")
+
   /** The erasure-cascade artifact store — every persisted family ONE
     * store, built once per corpus fingerprint (guard table committed
     * LAST so a half-built store rebuilds — the x3_index_incremental
@@ -115,8 +118,7 @@ object DedupQueries {
     graft.functions.Functions.register(s)
     val docs = Tables.documents(s, dir)
     val emb = Tables.embeddings(s, dir)
-    val store = new graft.operators.TableStore(
-      s"${Tables.TmpRoot}/erasure-cascade/v2/${docsKey(s, dir)}")
+    val store = cascadeStore(s, dir)
     if (!store.exists(s, "corpus_fp")) {
       graft.operators.TextIndex.build(docs, "doc_id", "text", store, "kw")
       graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
@@ -1132,6 +1134,10 @@ object DedupQueries {
         + when(col("g_type") === 1L, 2513L).otherwise(-4790L)
         + when(col("g_size") === 1L, 5600L).otherwise(-5030L))
 
+  private[graft] def editPairStore(s: SparkSession, dir: String) =
+    new graft.operators.TableStore(
+      s"${Tables.TmpRoot}/edit-pairs/v1/${Tables.fileKey(s, dir, "part.parquet")}")
+
   /** Persisted VERIFIED edit-distance pair set (dist ≤ 2 over part
     * names within brand × length-band blocks) — the same build-once /
     * probe-many contract as `nearDupPairs`/`tfidfPairs` (the TF-IDF
@@ -1156,8 +1162,7 @@ object DedupQueries {
     * segment equality collapses candidates to near-output size.
     * v1 = (brand × length-band blocking, levenshtein cap 2). */
   private[queries] def editPairs(s: SparkSession, dir: String): DataFrame = {
-    val store = new graft.operators.TableStore(
-      s"${Tables.TmpRoot}/edit-pairs/v1/${Tables.fileKey(s, dir, "part.parquet")}")
+    val store = editPairStore(s, dir)
     if (!store.exists(s, "pairs2")) {
       val p = Tables.part(s, dir)
         .select(col("p_partkey"), col("p_brand"), col("p_name"),

@@ -1556,10 +1556,10 @@ object StreamQueries {
       val cutsF = cuts.select((1 to 9).map(k =>
         floor(col(s"c$k")).cast("long").as(s"c$k")): _*)
       store.replace(s, "cuts", cutsF)
-      def bin(df: DataFrame, cf: DataFrame): org.apache.spark.sql.Column =
+      val bin =
         (1 to 9).map(k => when(col("v6") >= col(s"c$k"), 1L).otherwise(0L)).reduce(_ + _) + lit(1L)
       store.replace(s, "ref_counts",
-        ref.crossJoin(broadcast(cutsF)).withColumn("bin", bin(ref, cutsF))
+        ref.crossJoin(broadcast(cutsF)).withColumn("bin", bin)
           .groupBy($"bin").agg(count(lit(1)).as("n_ref")))
       val stream = files(s, tagged.select($"ts", $"v6").schema, g.stage)
       drain(s, g, None) {
@@ -1568,7 +1568,7 @@ object StreamQueries {
             val sb = b.sparkSession
             val cf = store.read(sb, "cuts")
             val binned = b.crossJoin(org.apache.spark.sql.functions.broadcast(cf))
-              .withColumn("bin", bin(b, cf))
+              .withColumn("bin", bin)
             graft.operators.IncrementalAgg.applyBatchM(sb, store, "cur_counts",
               binned, Seq("bin"),
               Seq(graft.operators.IncrementalAgg.Measure("n_cur", count(lit(1)))),

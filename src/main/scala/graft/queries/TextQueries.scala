@@ -413,10 +413,10 @@ object TextQueries {
         .groupBy($"word").agg(count(lit(1)).as("freq"))
         .withColumn("enc", regexp_replace($"word", "(.)", "<$1>"))
         .localCheckpoint()
-      def syms(c: org.apache.spark.sql.Column) =
+      val syms =
         split(expr("substring(enc, 2, length(enc) - 2)"), "><")
       def round1(enc: DataFrame): DataFrame = {
-        val pairs = enc.withColumn("s", syms($"enc"))
+        val pairs = enc.withColumn("s", syms)
           .filter(size($"s") >= 2)
           .select($"freq", explode(expr(
             "transform(sequence(1, size(s) - 1), i -> struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))")).as("p"))
@@ -439,7 +439,7 @@ object TextQueries {
           concat($"a", lit("+"), $"b").as("txt"), $"c".as("n")).distinct())
         .unionByName(e3.select(lit("merge").as("kind"), lit(3L).as("rk"),
           concat($"a", lit("+"), $"b").as("txt"), $"c".as("n")).distinct())
-      val top20 = e3.withColumn("s", syms($"enc"))
+      val top20 = e3.withColumn("s", syms)
         .select($"freq", explode($"s").as("sym"))
         .groupBy($"sym").agg(sum($"freq").as("n"))
         .orderBy($"n".desc, $"sym").limit(20)

@@ -12,12 +12,21 @@ import graft.sources.Tables
 object VectorQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Cache key for persisted indexes: sf dir name + a fingerprint of
+  /** A persisted index store, keyed by sf dir name + a fingerprint of
     * the embeddings file (length ⊕ mtime). If the testdata is ever
     * regenerated in place, the fingerprint changes and the stale index
     * is abandoned instead of silently serving oracle-gated queries. */
-  private def indexKey(s: SparkSession, dir: String): String =
-    graft.sources.Tables.fileKey(s, dir, "embeddings.parquet")
+  private def indexStore(s: SparkSession, dir: String, key: String) =
+    new graft.operators.TableStore(
+      s"${Tables.TmpRoot}/$key/${Tables.fileKey(s, dir, "embeddings.parquet")}")
+
+  // The persisted stores the specs open too, so a key bump reaches both.
+  private[graft] def ivfScalStore(s: SparkSession, dir: String) = indexStore(s, dir, "ivf-scal/v2")
+  private[graft] def ivfFoldStore(s: SparkSession, dir: String) = indexStore(s, dir, "ivf-fold/v2")
+  private[graft] def ivfDeleteStore(s: SparkSession, dir: String) = indexStore(s, dir, "ivf-delete/v1")
+  private[graft] def mipsStore(s: SparkSession, dir: String) = indexStore(s, dir, "mips-index/v1")
+  private[graft] def pqStore(s: SparkSession, dir: String, k: Int) = indexStore(s, dir, s"pq-model/v1-k$k")
+  private[graft] def sqStore(s: SparkSession, dir: String) = indexStore(s, dir, "sq-codes/v1")
 
   val all: Map[String, Q] = Map(
     // ---- X2 scale path: LSH-bucketed ANN top-k ----------------------
@@ -35,10 +44,9 @@ object VectorQueries {
       // v3 path segment = index FORMAT version (v3: params meta table,
       // corpus-derived bits; v2 sorted (t,b) layout): bump it whenever
       // build semantics change, or an index persisted by older code
-      // would silently serve a now-oracle-gated query; indexKey guards
+      // would silently serve a now-oracle-gated query; the fingerprint key guards
       // against regenerated data
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ann-index/v3/${indexKey(s, dir)}")
+      val store = indexStore(s, dir, "ann-index/v3")
       if (!store.exists(s, "ann_buckets") || !store.exists(s, "ann_meta"))
         Ann.buildIndex(emb, "vec_id", "embedding", store, "ann")
       Ann.probeTopK(emb, "vec_id", "embedding", store, "ann", queryId = 0L, k = 10)
@@ -61,8 +69,7 @@ object VectorQueries {
     "x2_ann_batch_topk" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ann-index/v3/${indexKey(s, dir)}")
+      val store = indexStore(s, dir, "ann-index/v3")
       if (!store.exists(s, "ann_buckets") || !store.exists(s, "ann_meta"))
         Ann.buildIndex(emb, "vec_id", "embedding", store, "ann")
       Ann.probeTopKBatch(emb, "vec_id", "embedding", store, "ann",
@@ -83,9 +90,8 @@ object VectorQueries {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
       // v3 = cid-partitioned postings (v2 flat; v1 trained without the
-      // probe vector); indexKey guards against regenerated data
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ivf-index/v3/${indexKey(s, dir)}")
+      // probe vector); the fingerprint key guards against regenerated data
+      val store = indexStore(s, dir, "ivf-index/v3")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       graft.operators.Ivf.probeTopK(s, store, "ivf",
@@ -116,8 +122,7 @@ object VectorQueries {
     "x2_ivf_scalable_topk" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ivf-scal/v2/${indexKey(s, dir)}")
+      val store = ivfScalStore(s, dir)
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndexScalable(
           emb, "vec_id", "embedding", store, "ivf", iters = 6)
@@ -146,8 +151,7 @@ object VectorQueries {
     "x2_ivf_batch_topk" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ivf-index/v3/${indexKey(s, dir)}")
+      val store = indexStore(s, dir, "ivf-index/v3")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       val queries = emb.filter(col("vec_id") < 5)
@@ -176,8 +180,7 @@ object VectorQueries {
     "x2_ivf_fold_topk" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ivf-fold/v2/${indexKey(s, dir)}")
+      val store = ivfFoldStore(s, dir)
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings")) {
         graft.operators.Ivf.buildIndex(
           emb.filter(col("vec_id") % 10 =!= 9), "vec_id", "embedding", store, "ivf")
@@ -211,8 +214,7 @@ object VectorQueries {
     "x2_ivf_delete_topk" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ivf-delete/v1/${indexKey(s, dir)}")
+      val store = ivfDeleteStore(s, dir)
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       graft.operators.Ivf.remove(s, store, "ivf",
@@ -243,8 +245,7 @@ object VectorQueries {
     "x2_ivfpq_topk" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/ivf-index/v3/${indexKey(s, dir)}")
+      val store = indexStore(s, dir, "ivf-index/v3")
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         graft.operators.Ivf.buildIndex(emb, "vec_id", "embedding", store, "ivf")
       // finer 16-code (4-bit) codebook than the oracle-pinned K=4 one:
@@ -698,8 +699,7 @@ object VectorQueries {
     "x2_mips_indexed" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/mips-index/v1/${indexKey(s, dir)}")
+      val store = mipsStore(s, dir)
       graft.operators.Mips.indexedTopK(s, emb, "vec_id", "embedding",
         store, "mips", queryId = 0L, k = 10)
     }),
@@ -716,8 +716,7 @@ object VectorQueries {
     "x2_mips_batch" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/mips-index/v1/${indexKey(s, dir)}")
+      val store = mipsStore(s, dir)
       if (!store.exists(s, "mips_centroids") || !store.exists(s, "mips_postings"))
         graft.operators.Ivf.buildIndex(
           graft.operators.Mips.augment(emb, "vec_id", "embedding"),
@@ -759,8 +758,7 @@ object VectorQueries {
     "x2_filtered_topk" -> ((s, dir) => {
       Functions.register(s)
       val emb = Tables.embeddings(s, dir)
-      val store = new graft.operators.TableStore(
-        s"${Tables.TmpRoot}/label-part/v1/${indexKey(s, dir)}")
+      val store = indexStore(s, dir, "label-part/v1")
       if (!store.exists(s, "flt_postings"))
         store.replacePartitions(s, "flt_postings",
           emb.repartition(col("label")), "label")
@@ -1060,8 +1058,7 @@ object VectorQueries {
     * bit for bit. */
   private def fittedCentroids(s: SparkSession, dir: String,
       emb: DataFrame): Array[Array[Long]] = {
-    val store = new graft.operators.TableStore(
-      s"${Tables.TmpRoot}/kmeans-model/v1/${indexKey(s, dir)}")
+    val store = indexStore(s, dir, "kmeans-model/v1")
     if (store.exists(s, "centroids")) {
       val rows = store.read(s, "centroids").collect()
       val k = rows.map(_.getLong(0)).max.toInt + 1
@@ -1086,8 +1083,7 @@ object VectorQueries {
   private[queries] def fittedBooks(s: SparkSession, dir: String,
       emb: DataFrame, k: Int = graft.operators.Pq.K): Array[Array[Array[Long]]] = {
     import graft.operators.Pq
-    val store = new graft.operators.TableStore(
-      s"${Tables.TmpRoot}/pq-model/v1-k$k/${indexKey(s, dir)}")
+    val store = pqStore(s, dir, k)
     val books = Array.ofDim[Long](Pq.M, k, Pq.subDim)
     if (store.exists(s, "codebook")) {
       store.read(s, "codebook").collect().foreach(r =>
@@ -1114,8 +1110,7 @@ object VectorQueries {
   private[queries] def storedCodes(s: SparkSession, dir: String, emb: DataFrame,
       k: Int = graft.operators.Pq.K): (DataFrame, Array[Array[Array[Long]]]) = {
     val books = fittedBooks(s, dir, emb, k)
-    val store = new graft.operators.TableStore(
-      s"${Tables.TmpRoot}/pq-model/v1-k$k/${indexKey(s, dir)}")
+    val store = pqStore(s, dir, k)
     if (!store.exists(s, "pq_codes"))
       store.replace(s, "pq_codes",
         graft.operators.Pq.encode(emb, "vec_id", "embedding", books))
@@ -1144,8 +1139,7 @@ object VectorQueries {
 
   private[queries] def storedSqCodes(s: SparkSession, dir: String,
       emb: DataFrame): DataFrame = {
-    val store = new graft.operators.TableStore(
-      s"${Tables.TmpRoot}/sq-codes/v1/${indexKey(s, dir)}")
+    val store = sqStore(s, dir)
     if (!store.exists(s, "sq_codes"))
       store.replace(s, "sq_codes", sqEncode(emb))
     store.read(s, "sq_codes")
@@ -1168,8 +1162,7 @@ object VectorQueries {
 
   private[queries] def storedBqCodes(s: SparkSession, dir: String,
       emb: DataFrame): DataFrame = {
-    val store = new graft.operators.TableStore(
-      s"${Tables.TmpRoot}/bq-codes/v1/${indexKey(s, dir)}")
+    val store = indexStore(s, dir, "bq-codes/v1")
     if (!store.exists(s, "bq_codes"))
       store.replace(s, "bq_codes", bqEncode(emb))
     store.read(s, "bq_codes")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** The test session is built withExtensions(new GraftExtensions), so
   * these prove the injection path works with NO per-query
   * Functions.register call. */
@@ -21,7 +19,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("vec_dot edge semantics: length mismatch and null element give null") {
-    val s = spark; import s.implicits._
+    val s = spark
     val rows = s.sql(
       """SELECT vec_dot(array(1.0D), array(1.0D, 2.0D)) AS a,
         |       vec_dot(array(1.0D, CAST(NULL AS DOUBLE)), array(1.0D, 2.0D)) AS b,

@@ -4,17 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (JVM-wide —
-  * getOrCreate dedupes), small enough to start fast. */
+  * getOrCreate dedupes), with the confs Bench and Verify run. Four
+  * cores and four shuffle partitions: PlanShapeSpec's pins depend on
+  * them. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

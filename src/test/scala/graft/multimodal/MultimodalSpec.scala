@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.multimodal.Multimodal.{MediaFeatures, MediaRecord}
+import graft.multimodal.Multimodal.MediaRecord
 
 class MultimodalSpec extends SparkSpec {
 

@@ -12,11 +12,11 @@ class BucketingSpec extends SparkSpec {
     val tag = "spec001"
     val o = Bucketing.ensureBucketed(spark, "graft_buckspec", s"orders_$tag",
       Tables.orders(spark, dir), Seq("o_orderkey"), 4,
-      s"/root/repo/target/tmp/buckspec/$tag/orders_b")
+      s"${Tables.TmpRoot}/buckspec/$tag/orders_b")
     val l = Bucketing.ensureBucketed(spark, "graft_buckspec", s"lineitem_$tag",
       Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity")),
       Seq("l_orderkey"), 4,
-      s"/root/repo/target/tmp/buckspec/$tag/lineitem_b")
+      s"${Tables.TmpRoot}/buckspec/$tag/lineitem_b")
     (o, l)
   }
 

@@ -1,13 +1,14 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.sources.Tables
 
 class ChangefeedSpec extends SparkSpec {
 
   test("changesBetween classifies I/U/D and drops unchanged keys") {
     val s = spark; import s.implicits._
     val store = new TableStore(
-      s"/root/repo/target/tmp/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
+      s"${Tables.TmpRoot}/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
       retain = 2)
     val v1 = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0),
       (5L, "e", 50.0), (6L, "f", 60.0)).toDF("id", "s", "v")
@@ -29,7 +30,7 @@ class ChangefeedSpec extends SparkSpec {
   test("null-valued columns compare null-safely: null→value and value→null are updates") {
     val s = spark; import s.implicits._
     val store = new TableStore(
-      s"/root/repo/target/tmp/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
+      s"${Tables.TmpRoot}/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
       retain = 1)
     val v1 = Seq((1L, Some("x")), (2L, None: Option[String]), (3L, None: Option[String]))
       .toDF("id", "s")
@@ -49,7 +50,7 @@ class ChangefeedSpec extends SparkSpec {
     // (partition → version) manifest maps make the pruning exact
     val s = spark; import s.implicits._
     val store = new TableStore(
-      s"/root/repo/target/tmp/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
+      s"${Tables.TmpRoot}/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
       retain = 2)
     def b(vs: (Long, String, Int)*) = vs.toDF("id", "s", "p")
     store.upsertPartitioned(spark, "t",
@@ -88,7 +89,7 @@ class ChangefeedSpec extends SparkSpec {
   test("a RESTORE-aliased position short-circuits to an empty feed (no scan at all)") {
     val s = spark; import s.implicits._
     val store = new TableStore(
-      s"/root/repo/target/tmp/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
+      s"${Tables.TmpRoot}/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
       retain = 3)
     store.replace(spark, "t", Seq((1L, "a")).toDF("id", "s"))
     store.replace(spark, "t", Seq((1L, "b")).toDF("id", "s"))
@@ -104,7 +105,7 @@ class ChangefeedSpec extends SparkSpec {
   test("a WIDEN diffs (old side null-padded); a drop/retype is refused, not silently mis-diffed") {
     val s = spark; import s.implicits._
     val store = new TableStore(
-      s"/root/repo/target/tmp/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
+      s"${Tables.TmpRoot}/cdfspec-${java.util.UUID.randomUUID().toString.take(8)}",
       retain = 1)
     // a pure widen (the ALTER ADD COLUMNS shape) is well-defined: the
     // old side null-pads the new column, so the untouched row 1 is NOT

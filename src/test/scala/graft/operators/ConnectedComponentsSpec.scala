@@ -69,7 +69,7 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("seeded random graphs: many components, self-dup-free") {
     val rnd = new java.util.Random(42)
-    for (trial <- 0 until 5) {
+    for (_ <- 0 until 5) {
       val n = 50 + rnd.nextInt(100)
       val docs = (1L to n.toLong)
       val m = n / 2 + rnd.nextInt(n)

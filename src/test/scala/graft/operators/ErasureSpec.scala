@@ -14,7 +14,7 @@ import graft.sources.Tables
   * Idempotent: the second run reports zero everywhere. */
 class ErasureSpec extends SparkSpec {
 
-  private val Root = "/root/repo/target/tmp/erasure-spec/store"
+  private val Root = s"${Tables.TmpRoot}/erasure-spec/store"
   private val Erased = Seq(3L, 20L, 37L)
 
   private def freshStore(): TableStore = {

@@ -87,7 +87,7 @@ class IncrementalJoinSpec extends SparkSpec {
   }
 
   test("empty deltas are fine; overlapping non-key columns are rejected") {
-    val s = spark; import s.implicits._
+    val s = spark
     val (_, _, oBat, cBat) = frames()
     val store = freshStore()
     IncrementalJoin.applyBatch(s, store, "oc", oBat(0), cBat(0), Seq("o_custkey"), 0L)

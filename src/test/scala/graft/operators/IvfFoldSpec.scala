@@ -17,8 +17,7 @@ class IvfFoldSpec extends SparkSpec {
 
   private def foldStore(dir: String): TableStore = {
     val s = spark
-    val store = new TableStore(
-      s"/root/repo/target/tmp/ivf-fold/v2/${Tables.fileKey(s, dir, "embeddings.parquet")}")
+    val store = graft.queries.VectorQueries.ivfFoldStore(s, dir)
     if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings")) {
       val emb = Tables.embeddings(s, dir)
       Ivf.buildIndex(emb.filter(col("vec_id") % 10 =!= 9), "vec_id", "embedding", store, "ivf")

@@ -19,8 +19,7 @@ class IvfRemoveSpec extends SparkSpec {
 
   private def delStore(dir: String): TableStore = {
     val s = spark
-    val store = new TableStore(
-      s"/root/repo/target/tmp/ivf-delete/v1/${Tables.fileKey(s, dir, "embeddings.parquet")}")
+    val store = graft.queries.VectorQueries.ivfDeleteStore(s, dir)
     if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
       Ivf.buildIndex(Tables.embeddings(s, dir), "vec_id", "embedding", store, "ivf")
     Ivf.remove(s, store, "ivf",

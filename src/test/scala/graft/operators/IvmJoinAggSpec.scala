@@ -17,7 +17,7 @@ class IvmJoinAggSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val dir = "/root/testdata/sf0.001"
-    val path = "/root/repo/target/tmp/ivmjoinagg-spec"
+    val path = s"${Tables.TmpRoot}/ivmjoinagg-spec"
     val root = new org.apache.hadoop.fs.Path(path)
     root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
     val store = new TableStore(path)

@@ -15,9 +15,6 @@ import graft.sources.Tables
   * and build-once warm reuse of the persisted index. */
 class MipsIndexedSpec extends SparkSpec {
 
-  private def key(dir: String): String =
-    Tables.fileKey(spark, dir, "embeddings.parquet")
-
   private def exactTop10(dir: String): Seq[Long] = {
     val s = spark
     Functions.register(s)
@@ -38,7 +35,7 @@ class MipsIndexedSpec extends SparkSpec {
       Functions.register(s)
       val dir = s"/root/testdata/$sf"
       val emb = Tables.embeddings(s, dir)
-      val store = new TableStore(s"/root/repo/target/tmp/mips-index/v1/${key(dir)}")
+      val store = graft.queries.VectorQueries.mipsStore(s, dir)
       if (!store.exists(s, "mips_centroids") || !store.exists(s, "mips_postings"))
         Ivf.buildIndex(Mips.augment(emb, "vec_id", "embedding"), "vec_id", "aug", store, "mips")
       val qRaw = emb.filter(col("vec_id") === 0L).select(col("embedding").as("qv"))
@@ -56,7 +53,7 @@ class MipsIndexedSpec extends SparkSpec {
       Functions.register(s)
       val dir = s"/root/testdata/$sf"
       val emb = Tables.embeddings(s, dir)
-      val store = new TableStore(s"/root/repo/target/tmp/mips-index/v1/${key(dir)}")
+      val store = graft.queries.VectorQueries.mipsStore(s, dir)
       if (!store.exists(s, "mips_centroids") || !store.exists(s, "mips_postings"))
         Ivf.buildIndex(Mips.augment(emb, "vec_id", "embedding"), "vec_id", "aug", store, "mips")
       val queries = emb.filter(col("vec_id") < 5)
@@ -108,7 +105,7 @@ class MipsIndexedSpec extends SparkSpec {
     val s = spark
     Functions.register(s)
     val dir = "/root/testdata/sf0.01"
-    val store = new TableStore(s"/root/repo/target/tmp/mips-index/v1/${key(dir)}")
+    val store = graft.queries.VectorQueries.mipsStore(s, dir)
     val got = Mips.indexedTopK(s, Tables.embeddings(s, dir), "vec_id", "embedding",
         store, "mips", 0L, 10)
       .collect().map(_.getLong(0)).toSeq

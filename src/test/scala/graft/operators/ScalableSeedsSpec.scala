@@ -138,8 +138,7 @@ class ScalableSeedsSpec extends SparkSpec {
       Functions.register(s)
       val dir = s"/root/testdata/$sf"
       val emb = Tables.embeddings(s, dir)
-      val store = new TableStore(
-        s"/root/repo/target/tmp/ivf-scal/v2/${Tables.fileKey(s, dir, "embeddings.parquet")}")
+      val store = graft.queries.VectorQueries.ivfScalStore(s, dir)
       if (!store.exists(s, "ivf_centroids") || !store.exists(s, "ivf_postings"))
         Ivf.buildIndexScalable(emb, "vec_id", "embedding", store, "ivf", iters = 6)
       val posted = store.read(s, "ivf_postings").select("id")

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.Tables
 
 /** Pins the merge-on-read delete contract the oracle can't see:
   * data files stay byte-identical across deletes (the whole point),
@@ -12,7 +13,7 @@ import graft.SparkSpec
   * deletes never rewrite history, and vacuum collects staged-but-
   * uncommitted DV debris without touching the committed one. */
 class TableStoreMorSpec extends SparkSpec {
-  private val root = "/root/repo/target/tmp/mor-spec"
+  private val root = s"${Tables.TmpRoot}/mor-spec"
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -108,8 +109,7 @@ class TableStoreMorSpec extends SparkSpec {
 
   /** (partition-dir, file, length, mtime) of every DATA file across
     * all committed partition versions. */
-  private def pDataFiles(store: TableStore): Set[(String, String, Long, Long)] = {
-    val s = spark
+  private def pDataFiles(): Set[(String, String, Long, Long)] = {
     fs.listStatus(new Path(s"$root/t")).filter(_.isDirectory)
       .filter(_.getPath.getName.startsWith("p="))
       .flatMap { pd =>
@@ -125,11 +125,11 @@ class TableStoreMorSpec extends SparkSpec {
     val s = spark; import s.implicits._
     val store = freshStore()
     seedPartitioned(store)
-    val before = pDataFiles(store)
+    val before = pDataFiles()
     store.deleteWhereMorPartitioned(s, "t", $"p" === 2 && $"k" <= 50, Seq("k"), "p")
-    assert(pDataFiles(store) == before, "first partitioned MOR delete moved data files")
+    assert(pDataFiles() == before, "first partitioned MOR delete moved data files")
     store.deleteWhereMorPartitioned(s, "t", $"k" === 99, Seq("k"), "p")
-    assert(pDataFiles(store) == before, "second partitioned MOR delete moved data files")
+    assert(pDataFiles() == before, "second partitioned MOR delete moved data files")
     val kept = store.read(s, "t").select("k").as[Long].collect().toSet
     val expect = (1 to 100).map(_.toLong)
       .filterNot(i => (i % 5 == 2 && i <= 50) || i == 99).toSet
@@ -143,10 +143,10 @@ class TableStoreMorSpec extends SparkSpec {
     val store = freshStore()
     seedPartitioned(store)
     store.deleteWhereMorPartitioned(s, "t", $"p" === 1 && $"k" < 30, Seq("k"), "p")
-    val untouched = pDataFiles(store).filterNot(_._1 == "p=1")
+    val untouched = pDataFiles().filterNot(_._1 == "p=1")
     val viaDv = store.read(s, "t").orderBy("k").collect().toSeq
     store.compactDeletesPartitioned(s, "t", "p")
-    assert(pDataFiles(store).filterNot(_._1 == "p=1") == untouched,
+    assert(pDataFiles().filterNot(_._1 == "p=1") == untouched,
       "compaction rewrote partitions without deletes")
     assert(store.read(s, "t").orderBy("k").collect().toSeq == viaDv)
     assert(!store.read(s, "t").queryExecution.executedPlan.toString.contains("Anti"))

@@ -636,7 +636,6 @@ class TableStorePartitionSpec extends SparkSpec {
 
   test("a delete that empties EVERY partition leaves a readable zero-row table") {
     val store = freshStore()
-    val s = spark; import s.implicits._
     store.upsertPartitioned(spark, "t", batch(1, Seq("a" -> "x", "b" -> "y")),
       Seq("k"), "p_date", numFiles = Some(1))
     store.deleteWherePartitioned(spark, "t",

@@ -10,7 +10,7 @@ import graft.sources.Tables
 class ZoneMapSpec extends SparkSpec {
 
   private def freshStore() = new TableStore(
-    s"/root/repo/target/tmp/zmspec-${java.util.UUID.randomUUID().toString.take(8)}")
+    s"${Tables.TmpRoot}/zmspec-${java.util.UUID.randomUUID().toString.take(8)}")
 
   test("zone map prunes files on a narrow range and the pruned read is a safe superset") {
     val store = freshStore()

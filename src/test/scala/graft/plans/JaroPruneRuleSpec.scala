@@ -45,7 +45,6 @@ class JaroPruneRuleSpec extends SparkSpec {
   }
 
   test("rewrite preserves answers (guard is implied, never filtering)") {
-    val s = spark
     // expected: score every pair WITHOUT a filterable predicate shape,
     // then filter driver-side
     val scored = fixture.select(col("a"), col("b"),

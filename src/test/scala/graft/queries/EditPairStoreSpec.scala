@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.TableStore
 import graft.sources.Tables
 
 /** Pins the persisted edit-distance pair store contract (the
@@ -45,8 +44,7 @@ class EditPairStoreSpec extends SparkSpec {
   test("warm call resolves the same committed version (no rebuild)") {
     val s = spark
     DedupQueries.editPairs(s, dir).count()
-    val store = new TableStore(
-      s"/root/repo/target/tmp/edit-pairs/v1/${Tables.fileKey(s, dir, "part.parquet")}")
+    val store = DedupQueries.editPairStore(s, dir)
     val v1 = store.resolve(s, "pairs2")
     DedupQueries.editPairs(s, dir).count()
     assert(store.resolve(s, "pairs2") == v1)

@@ -22,9 +22,7 @@ class ErasureCascadeSpec extends SparkSpec {
     val dir = s"/root/testdata/$sf"
     // the query itself builds (or warms) the store and runs the cascade
     DedupQueries.all("x1_erasure_cascade")(s, dir).count()
-    val store = new graft.operators.TableStore(
-      s"/root/repo/target/tmp/erasure-cascade/v2/${Tables.fileKey(s, dir, "documents.parquet")}")
-    (store, Tables.embeddings(s, dir))
+    (DedupQueries.cascadeStore(s, dir), Tables.embeddings(s, dir))
   }
 
   for (sf <- Seq("sf0.001", "sf0.01"))

@@ -54,7 +54,6 @@ class MixtureSpec extends SparkSpec {
   }
 
   test("selection is invariant to input partitioning") {
-    val s = spark; import s.implicits._
     val base = selection.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
     // same query over an adversarially repartitioned (and re-sorted) input
     val shuffled = Tables.documents(spark, dir).repartition(7, col("doc_id"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{Pq, TableStore}
+import graft.operators.Pq
 import graft.sources.Tables
 
 /** Pins the r7 PQ persistence contract (VERDICT r6 #3): the (id, m,
@@ -16,11 +16,9 @@ class PqStoreSpec extends SparkSpec {
   test("storedCodes builds once: warm call reuses the committed version") {
     val s = spark
     val emb = Tables.embeddings(s, dir)
-    val path = s"/root/repo/target/tmp/pq-model/v1-k${Pq.K}/" +
-      Tables.fileKey(s, dir, "embeddings.parquet")
     // cold build
     val (codes1, books) = VectorQueries.storedCodes(s, dir, emb)
-    val store = new TableStore(path)
+    val store = VectorQueries.pqStore(s, dir, Pq.K)
     val v1 = store.resolve(s, "pq_codes")
     // warm call: same committed version dir — no rebuild
     val (codes2, _) = VectorQueries.storedCodes(s, dir, emb)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.Functions
-import graft.operators.TableStore
 import graft.sources.Tables
 
 /** Pins the `x2_sq_topk` funnel contract: the int8-code integer
@@ -97,8 +96,7 @@ class SqFunnelSpec extends SparkSpec {
     assert(bad.count() == 0)
     assert(codes.count() == emb.count())
     // warm call resolves the SAME committed version (no rebuild)
-    val store = new TableStore(
-      s"/root/repo/target/tmp/sq-codes/v1/${Tables.fileKey(s, dir, "embeddings.parquet")}")
+    val store = VectorQueries.sqStore(s, dir)
     val v1 = store.resolve(s, "sq_codes")
     VectorQueries.storedSqCodes(s, dir, emb)
     assert(store.resolve(s, "sq_codes") == v1)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.TableStore
-import graft.streaming.Streams.{KeyedEvent, KeyCount}
+import graft.streaming.Streams.KeyedEvent
 
 /** Drives the streaming operators over MemoryStream: per-batch upsert
   * transactionality (T1), watermarked windows (T2/T3), stateful dedup
@@ -410,7 +410,7 @@ class StreamsSpec extends SparkSpec {
   test("T7/A9: cusumStates folds split days across batches; watermark timeout folds the last day and EVICTS") {
     val s = spark; import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    import Streams.{CusumEvent, CusumRow}
+    import Streams.CusumEvent
     // reference series for key "u": days 1,2,3 with counts 3,1,4;
     // nd=3, total=8 → deviations x·3−8: day1 +1, day2 −5, day3 +4.
     // CUSUM: S1=max(0,1)=1, S2=max(0,1−5)=0, S3=max(0,0+4)=4 → mx=4.
@@ -462,7 +462,7 @@ class StreamsSpec extends SparkSpec {
   test("T11/X5: funnelStates — stages straddle batches, no re-anchor, in-batch order by (ts, eid)") {
     val s = spark; import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    import Streams.{FunnelEvent, FunnelRow}
+    import Streams.FunnelEvent
     val mem = MemoryStream[FunnelEvent]
     val q = Streams.funnelStates(mem.toDS()).toDF()
       .writeStream.outputMode("update").format("memory").queryName("fun").start()
