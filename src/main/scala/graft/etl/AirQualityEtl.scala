@@ -222,7 +222,9 @@ object AirQualityEtl {
     * the batch touches (an hourly batch touches exactly one) — the
     * reference's per-table transaction at partition granularity.
     * `p_date` = yyyymmdd prefix of `report_ts`, so it is functionally
-    * determined by every table's key.
+    * determined by every table's key, and the page's own date gives it
+    * without a Spark job. Each table's commit is one Spark job (see
+    * `upsertPartitioned`'s `numFiles` and `partitions`).
     *
     * The three tables commit concurrently, one pool thread each, and
     * each commit is its own atomic `_pmanifest` rename — the same as
@@ -237,6 +239,7 @@ object AirQualityEtl {
     def withDate(df: DataFrame): DataFrame =
       df.withColumn("p_date", (col("report_ts") / 100).cast("int"))
     val tables = Seq("cdmx" -> b.cdmx, "edomex" -> b.edomex, "gral_stats" -> b.gralStats)
+    val day = Seq((b.meta.reportTs / 100).toInt)
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size,
       (r: Runnable) => new Thread(r, CommitThreadName))
@@ -245,7 +248,7 @@ object AirQualityEtl {
         org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(session, pool) {
           // hourly report tables are micro-batch-sized — one output file each
           store.upsertPartitioned(spark, name, withDate(df),
-            cfg.tableKeys(name), "p_date", numFiles = Some(1))
+            cfg.tableKeys(name), "p_date", numFiles = Some(1), partitions = Some(day))
         }
       }
       val failures = commits.flatMap { c =>

@@ -439,8 +439,11 @@ final class TableStore(val root: String, val retain: Int = 0) {
       lines.find(_.startsWith("#schema\t")).map(_.stripPrefix("#schema\t"))
         .map(org.apache.spark.sql.types.DataType.fromJson(_)
           .asInstanceOf[org.apache.spark.sql.types.StructType]) match {
+        // a local relation, not an empty RDD: its zero size lets the
+        // optimizer drop a merge's join against it, where an RDD's
+        // unknown size would plan a shuffle
         case Some(schema) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
         case None => spark.read.parquet(resolve(spark, name))
       }
     }
@@ -1630,12 +1633,13 @@ final class TableStore(val root: String, val retain: Int = 0) {
 
   /** Keyed MERGE with `nupdates` counter semantics
     * (scrapper.py:196-206). First batch on a missing table inserts
-    * everything with nupdates = 1. */
-  /** @param numFiles target file count for the rewrite — pass Some(1)
+    * everything with nupdates = 1.
+    *
+    * @param numFiles target file count for the rewrite — pass Some(1)
     *   for micro-batch-sized tables (one tiny file instead of one
     *   near-empty file per shuffle partition); leave None for big
-    *   tables so write parallelism follows the plan. */
-  /** @param batchId replay guard for at-least-once drivers
+    *   tables so write parallelism follows the plan.
+    * @param batchId replay guard for at-least-once drivers
     *   (foreachBatch re-runs a batch after failure): a batch whose id
     *   is <= the last committed one is a no-op, so the non-idempotent
     *   counter bump applies exactly once per logical batch. Ids must
@@ -1644,11 +1648,11 @@ final class TableStore(val root: String, val retain: Int = 0) {
       counterCol: String = "nupdates", numFiles: Option[Int] = None,
       batchId: Option[Long] = None): Unit = {
     if (alreadyApplied(spark, name, batchId)) return
-    // CAS default-on (VERDICT r12 missing #1): the identity is
-    // captured HERE, before the target read the merge is derived
-    // from — a concurrent commit landing between this read and our
-    // manifest swap (the first real deployment race: hourly ingest
-    // vs background compaction on the same table) is refused loudly
+    // CAS default-on: the identity is captured HERE, before the target
+    // read the merge is derived from — a concurrent commit landing
+    // between this read and our manifest swap (the first real
+    // deployment race: hourly ingest vs background compaction on the
+    // same table) is refused loudly
     // instead of silently last-winning, and the caller retries from
     // the new version. Same contract on every read-modify-write verb.
     val base = currentVersionId(spark, name)
@@ -1671,49 +1675,129 @@ final class TableStore(val root: String, val retain: Int = 0) {
       readCommitMeta(spark, name).orElse(readPartitionedCommitMeta(spark, name))
         .flatMap(_.toLongOption).exists(_ >= id))
 
-  /** Partition-pruned read: only directories whose `partCol` value is
-    * in `values` are listed/scanned — the plan shows the IN filter
-    * under `PartitionFilters`, and untouched partitions cost zero I/O
-    * (pinned by TableStorePartitionSpec). */
+  /** Partition-pruned read: the read lists and scans only the leaves
+    * of the partitions whose `partCol` value is in `values` (the head
+    * state narrowed by `pruneStateLines`), and the plan keeps the IN
+    * filter under `PartitionFilters` (pinned by
+    * TableStorePartitionSpec). Untouched partitions cost no listing
+    * and no scan, whatever the table's age. When some value's dir name
+    * cannot be derived (see `partitionDirNames`), every leaf is listed
+    * and the IN filter alone prunes the scan. */
   def prunedRead(spark: SparkSession, name: String, partCol: String,
-      values: Seq[Any]): DataFrame =
-    read(spark, name).filter(col(partCol).isInCollection(values))
+      values: Seq[Any]): DataFrame = {
+    val base = pmanifestLines(fs(spark), name) match {
+      case Some(lines) =>
+        val head = lines.filterNot(_.startsWith("#h\t"))
+        readPartitionedState(spark, name,
+          partitionDirNames(head, partCol, values).fold(head)(pruneStateLines(head, _)))
+      case None => read(spark, name)
+    }
+    base.filter(col(partCol).isInCollection(values))
+  }
 
-  /** Partition-scoped keyed MERGE — the scale path for `upsert`
-    * (VERDICT r1 fix #1). The table lives hive-partitioned by
-    * `partCol`; a batch reads ONLY the partitions its keys touch
-    * (partition-pruned scan), merges, and swaps ONLY those partition
-    * directories. Untouched partitions are never read or rewritten —
-    * their files stay byte-identical — so an hourly micro-batch over a
-    * 100 TB store pays one partition's scan+write, not the table's.
-    * This is the reference's per-table transaction
-    * (/root/reference/scrapper.py:208-214) at partition granularity:
-    * each partition swap is an atomic rename commit.
+  /** The dir names (`partCol=value`) the parquet writer gives `values`,
+    * or None when some value's name cannot be derived safely from the
+    * state's committed schema. Only integral values on an integral
+    * column and non-empty strings on a binary-collated string column
+    * qualify: their IN match is exact equality on the same decimal or
+    * string form the writer escapes. Anything else (a cast or
+    * collation-dependent match, a null or empty value) returns None,
+    * because a dropped leaf would hide target rows from a merge and
+    * duplicate their keys. */
+  private def partitionDirNames(lines: Seq[String], partCol: String,
+      values: Seq[Any]): Option[Set[String]] = {
+    import org.apache.spark.sql.types._
+    val colType = lines.find(_.startsWith("#schema\t"))
+      .map(l => DataType.fromJson(l.stripPrefix("#schema\t")))
+      .collect { case s: StructType => s }
+      .flatMap(_.fields.find(_.name == partCol)).map(_.dataType)
+    val integralCol = colType.exists {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val binaryStringCol = colType.exists {
+      case s: StringType => s.collationId == StringType.collationId
+      case _ => false
+    }
+    val names = values.map {
+      case v @ (_: Byte | _: Short | _: Int | _: Long) if integralCol => Some(v.toString)
+      case v: String if v.nonEmpty && binaryStringCol => Some(v)
+      case _ => None
+    }
+    if (names.exists(_.isEmpty)) None
+    else Some(names.flatten.map(partDirName(partCol, _)).toSet)
+  }
+
+  /** The partition dir name (`partCol=value`) the parquet writer gives
+    * a non-null value: hive path escaping (':' → %3A etc.) of both
+    * sides. */
+  private def partDirName(partCol: String, v: Any): String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .getPartitionPathString(partCol, String.valueOf(v))
+
+  /** Partition-scoped keyed MERGE, the scale path for `upsert`. The
+    * table lives hive-partitioned by `partCol`; a batch reads ONLY the
+    * partitions its rows touch (partition-pruned scan), merges, and
+    * swaps ONLY those partition directories. Untouched partitions are
+    * never read or rewritten, so their files stay byte-identical, and
+    * an hourly micro-batch over a 100 TB store pays one partition's
+    * scan+write, not the table's. This is the reference's per-table
+    * transaction (scrapper.py:208-214) at partition granularity: the
+    * whole batch commits through one atomic `_pmanifest` rename.
     *
     * Contract: `updates` must carry `partCol`; `partCol` must be
     * NON-NULL (a null partition value cannot be partition-pruned, so
     * its target rows would be skipped by the merge) and functionally
     * determined by the merge keys (same key ⇒ same partition, e.g. a
-    * date prefix of the key) — otherwise a key could "move" between
+    * date prefix of the key), otherwise a key could "move" between
     * partitions and duplicate. Int-valued partition columns round-trip
     * hive partition-type inference losslessly; prefer them (e.g.
-    * yyyymmdd) over date/string values. */
-  /** @param batchId replay guard, same contract as `upsert`: the id
+    * yyyymmdd) over date/string values.
+    *
+    * @param numFiles target file count per written partition, applied
+    *   as a coalesce of the merged output. None leaves write
+    *   parallelism to the plan; Some(1) is for micro-batch-sized tables.
+    * @param batchId replay guard, same contract as `upsert`: the id
     *   commits atomically inside the partition manifest rename, so an
     *   at-least-once driver's replayed batch is a no-op instead of
-    *   re-bumping counters in partitions that already committed. */
+    *   re-bumping counters in partitions that already committed.
+    * @param partitions the `partCol` values `updates` touches, when
+    *   the caller knows them (an hourly batch touches one day). Given,
+    *   they replace the `distinct().collect()` job that would find
+    *   them, and they are checked inside the write job: any `updates`
+    *   row whose value is not in the list (null included) fails the
+    *   write through `raise_error`, before anything is published.
+    *   Given together with `numFiles = Some(1)`, they also mark the
+    *   commit as small enough for one task: both merge inputs (the
+    *   pruned target and `updates`) are coalesced to one partition.
+    *   That already satisfies the full-outer join's clustering, so
+    *   while each input's estimated size is within
+    *   `spark.sql.maxSinglePartitionBytes` no Exchange is planned, and
+    *   the merge and the write run as one single-task stage, one Spark
+    *   job per commit. An input past that size (or with no estimate,
+    *   e.g. an RDD-backed frame) is still shuffled, but the shuffle's
+    *   map side is then one task. Without `partitions` the merge keeps
+    *   its parallel plan and only its output is coalesced. */
   def upsertPartitioned(spark: SparkSession, name: String, updates: DataFrame,
       keys: Seq[String], partCol: String,
       counterCol: String = "nupdates", numFiles: Option[Int] = None,
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None, partitions: Option[Seq[Any]] = None): Unit = {
     require(updates.columns.contains(partCol), s"updates must carry $partCol")
     if (alreadyApplied(spark, name, batchId)) return
     // CAS default-on: identity captured before the pruned target read
     // (see upsert); a concurrent commit refuses this one loudly
     val base = commitIdentity(spark, name)
+    val checked = partitions.fold(updates) { vs =>
+      updates.withColumn(partCol, when(col(partCol).isInCollection(vs), col(partCol))
+        .otherwise(raise_error(concat(
+          lit(s"upsertPartitioned '$name': $partCol value "),
+          coalesce(col(partCol).cast("string"), lit("NULL")),
+          lit(s" is not in the declared partitions [${vs.mkString(", ")}]")))))
+    }
+    def coalesced(df: DataFrame) = numFiles.fold(df)(df.coalesce)
     val merged =
       if (!exists(spark, name)) {
-        updates.withColumn(counterCol, lit(1L))
+        coalesced(checked.withColumn(counterCol, lit(1L)))
       } else {
         // IMPLICIT schema evolution stays rejected: widening through a
         // touched-partition rewrite would leave UNTOUCHED partitions on
@@ -1730,16 +1814,20 @@ final class TableStore(val root: String, val retain: Int = 0) {
             "all-partition sweep under one atomic commit), then upsert")
         // touched partition values: bounded driver collect — one value
         // per partition the micro-batch touches, not per row
-        val touched = updates.select(partCol).distinct().collect().map(_.get(0)).toSeq
-        Upsert.merge(prunedRead(spark, name, partCol, touched), updates, keys, Some(counterCol))
+        val touched = partitions.getOrElse(
+          updates.select(partCol).distinct().collect().map(_.get(0)).toSeq)
+        def input(df: DataFrame) =
+          if (partitions.isDefined && numFiles.contains(1)) df.coalesce(1) else df
+        coalesced(Upsert.merge(input(prunedRead(spark, name, partCol, touched)),
+          input(checked), keys, Some(counterCol)))
       }
-    replacePartitions(spark, name, numFiles.fold(merged)(merged.coalesce), partCol,
+    replacePartitions(spark, name, merged, partCol,
       meta = batchId.map(_.toString), expectedIdentity = Some(base))
   }
 
-  /** APPEND-ONLY ingest — the keyless fact-feed shape (VERDICT r10
-    * missing #4: the most common ingest is a blind append, which the
-    * keyed MERGE path deliberately refuses). An append-only table is
+  /** APPEND-ONLY ingest — the keyless fact-feed shape (the most
+    * common ingest is a blind append, which the keyed MERGE path
+    * deliberately refuses). An append-only table is
     * hive-partitioned by the internal batch ordinal `_ab`: each append
     * stages exactly ONE new partition dir and publishes it through the
     * same batch-atomic `_pmanifest` rename every partitioned commit
@@ -1759,7 +1847,7 @@ final class TableStore(val root: String, val retain: Int = 0) {
     // two concurrent appends would otherwise both compute the same
     // ordinal and last-writer-wins the manifest — one batch silently
     // lost AND the other double-numbered. The loser now gets a loud
-    // ConcurrentModificationException to retry (VERDICT r11 missing #3).
+    // ConcurrentModificationException to retry.
     val baseIdentity = commitIdentity(spark, name)
     val next: Int =
       if (!exists(spark, name)) 0
@@ -1773,9 +1861,9 @@ final class TableStore(val root: String, val retain: Int = 0) {
         // `#abnext` manifest header keeps the ordinal MONOTONE across a
         // `dropBatches` that expired every batch partition — leaf-max
         // alone would restart at 0 and reuse ordinals an incremental
-        // consumer's `_ab > k` watermark already consumed (ADVICE r11
-        // #1). Tables committed before the header shipped fall back to
-        // leaf max and pick the header up on this commit.
+        // consumer's `_ab > k` watermark already consumed. Tables
+        // committed before the header shipped fall back to leaf max and
+        // pick the header up on this commit.
         val leafNext = partitionedLeafPaths(spark, name).get
           .map(_.split('/').dropRight(1).last.stripPrefix("_ab=").toInt)
           .maxOption.getOrElse(-1) + 1
@@ -2049,9 +2137,9 @@ final class TableStore(val root: String, val retain: Int = 0) {
     readPartitionedState(spark, name, sliced)
   }
 
-  /** Swap in `df`'s partitions, BATCH-atomically (VERDICT r2 missing
-    * #1): fully materialize to a temp dir (partitioned by `partCol`),
-    * stage every written partition as an UNLISTED version dir
+  /** Swap in `df`'s partitions, BATCH-atomically: fully materialize
+    * to a temp dir (partitioned by `partCol`), stage every written
+    * partition as an UNLISTED version dir
     * `partCol=value/v-<tag>` (invisible — readers only follow the
     * manifest), then publish the whole batch with ONE atomic
     * `_pmanifest` rename. A crash anywhere before that rename leaves
@@ -2083,15 +2171,16 @@ final class TableStore(val root: String, val retain: Int = 0) {
     * write: each legacy partition dir's files move into a `v-adopted`
     * version dir first (two renames per partition; the one-time
     * migration is NOT crash-atomic — the v2 commit that follows is).
-    * Returns the published partition dir names (`partCol=value`). */
-  /** @param extraHeaders extra manifest header lines to publish with
+    * Returns the published partition dir names (`partCol=value`).
+    *
+    * @param extraHeaders extra manifest header lines to publish with
     *   this commit (e.g. `append`'s `#abnext` watermark). An existing
     *   `#abnext` header is carried forward verbatim unless this commit
     *   supplies a replacement — maintenance commits (compaction,
     *   retention, MERGE rewrites) must never regress the append
-    *   ordinal watermark. */
-  /** @param expectedIdentity optimistic-concurrency guard (the
-    *   partitioned `replaceIfUnchanged` — VERDICT r11 missing #3):
+    *   ordinal watermark.
+    * @param expectedIdentity optimistic-concurrency guard (the
+    *   partitioned `replaceIfUnchanged`):
     *   Some(id as captured by `commitIdentity` when the caller read
     *   its inputs) commits only if the manifest identity still
     *   matches — checked fail-fast at entry AND immediately before
@@ -2235,9 +2324,9 @@ final class TableStore(val root: String, val retain: Int = 0) {
       if (keptDv.isEmpty) Seq.empty
       else s"#dvkeys\t${exDvKeys.mkString(",")}" +:
         keptDv.toSeq.sortBy(_._1).map { case (p, rel) => s"#dv\t$p\t$rel" }
-    // history push (the partitioned retention chain — VERDICT r10
-    // missing #2): the pre-commit head becomes generation 1, prior
-    // generations shift back, the window truncates to `retain` — so a
+    // history push (the partitioned retention chain): the pre-commit
+    // head becomes generation 1, prior generations shift back, the
+    // window truncates to `retain` — so a
     // partitioned table gets the same time-travel/RESTORE reach the
     // whole-table chain has, with the history riding in the SAME one
     // atomic manifest rename as the data
@@ -2856,10 +2945,7 @@ final class TableStore(val root: String, val retain: Int = 0) {
     if (touched.isEmpty) return
     val tag = UUID.randomUUID().toString.take(8)
     val newDv = touched.map { v =>
-      // hive path escaping (':' → %3A etc.) so the dir-name lookup
-      // matches what partitionBy wrote for non-alphanumeric values
-      val pn = s"$partCol=" + org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(String.valueOf(v))
+      val pn = partDirName(partCol, v)
       val ver = pmap.getOrElse(pn, throw new IllegalStateException(
         s"matched rows in unmanifested partition $pn"))
       val old = exDv.get(pn).map(rel =>

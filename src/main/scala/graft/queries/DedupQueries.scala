@@ -829,11 +829,11 @@ object DedupQueries {
       val dup = grams.groupBy("fp").agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") >= 2).select("fp")
       val covered = grams.join(dup, "fp")
-        .select(col("doc_id"), explode(sequence(col("p"), col("p") + 12)).as("cpos"))
+        .select(col("doc_id").as("cdoc"),
+          explode(sequence(col("p"), col("p") + 12)).as("cpos"))
         .distinct()
       val kept = toks.join(covered,
-        toks("doc_id") === covered("doc_id") && toks("pos") === covered("cpos"),
-        "left_anti")
+        col("doc_id") === col("cdoc") && col("pos") === col("cpos"), "left_anti")
       val rebuilt = kept.groupBy("doc_id").agg(
         count(lit(1)).as("n_kept"),
         md5(concat_ws(" ",

@@ -133,6 +133,36 @@ class AirQualityEtlSpec extends SparkSpec {
       assert(store.read(spark, t).collect().forall(_.getAs[Long]("nupdates") == 2L), t)
   }
 
+  test("runBatch: an accepted batch runs 3 Spark jobs of one stage each, into an empty store, an existing day and a new day") {
+    val store = freshStore()
+    val sc = spark.sparkContext
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        stagesPerJob.add(e.stageInfos.size)
+    }
+    def jobsOf(page: String): Seq[Int] = {
+      ListenerBus.drain(sc)
+      stagesPerJob.clear()
+      sc.addSparkListener(listener)
+      try {
+        AirQualityEtl.runBatch(spark, store, page)
+        ListenerBus.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      stagesPerJob.asScala.toSeq
+    }
+    assert(jobsOf(html) == Seq(1, 1, 1), "first batch into an empty store")
+    assert(jobsOf(html) == Seq(1, 1, 1), "same hour again: every key matched")
+    assert(jobsOf(html.replace("09:00 h", "10:00 h")) == Seq(1, 1, 1),
+      "a later hour of the same day: new keys into an existing partition")
+    assert(jobsOf(html.replace("lunes 5 de mayo", "martes 6 de mayo")) == Seq(1, 1, 1),
+      "the next day: a new partition beside an existing one")
+    val cdmx = store.read(spark, "cdmx").collect()
+    assert(cdmx.length == 12)
+    assert(cdmx.map(r => r.getAs[Long]("report_ts") -> r.getAs[Long]("nupdates")).toSet ==
+      Set(2025050509L -> 2L, 2025050510L -> 1L, 2025050609L -> 1L))
+  }
+
   test("archive fan-out: executor-side parse of many pages equals the single-page path; bad pages drop per-page") {
     val s = spark; import s.implicits._
     val pages = Seq(

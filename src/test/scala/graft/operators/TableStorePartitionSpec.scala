@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
 
@@ -97,6 +100,141 @@ class TableStorePartitionSpec extends SparkSpec {
     assert(p.contains("PartitionFilters") && p.contains("p_date"), p.take(800))
     // pruning is real: only the matching partition's rows are read
     assert(store.prunedRead(spark, "t", "p_date", Seq(20250506)).count() == 1)
+  }
+
+  /** Spark jobs started while `run` executes. */
+  private def jobCount(run: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { run; ListenerBus.drain(sc) } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** (k, v, partition value as string, nupdates) of every row, sorted. */
+  private def rowsOf(store: TableStore, name: String, partCol: String): Seq[String] =
+    store.read(spark, name).collect().map(r => Seq(r.getAs[Any]("k"), r.getAs[Any]("v"),
+      r.getAs[Any](partCol), r.getAs[Long]("nupdates")).mkString("|")).toSeq.sorted
+
+  test("a one-partition upsert into a 40-partition table runs ONE job; prunedRead lists only touched leaves") {
+    val s = spark; import s.implicits._
+    // int partitions: 40 days, then one day re-upserted with the caller's partition
+    val ints = freshStore()
+    ints.upsertPartitioned(spark, "t",
+      (1 to 40).map(d => (s"k$d", "x", d)).toDF("k", "v", "p_date"),
+      Seq("k"), "p_date", numFiles = Some(1))
+    val intJobs = jobCount(ints.upsertPartitioned(spark, "t",
+      Seq(("k7", "y", 7), ("n7", "z", 7)).toDF("k", "v", "p_date"),
+      Seq("k"), "p_date", numFiles = Some(1), partitions = Some(Seq(7))))
+    assert(intJobs == 1, s"$intJobs jobs")
+    assert(rowsOf(ints, "t", "p_date").filter(_.endsWith("|7|2")) == Seq("k7|y|7|2"))
+    assert(ints.read(spark, "t").count() == 41)
+    assert(ints.prunedRead(spark, "t", "p_date", Seq(7)).count() == 2)
+    assert(ints.prunedRead(spark, "t", "p_date", Seq(7L, 41)).count() == 2)
+    // a value whose dir name is not derived (double on an int column)
+    // falls back to every leaf and still finds the rows
+    assert(ints.prunedRead(spark, "t", "p_date", Seq(7.0)).count() == 2)
+
+    // string partitions, one of them needing path escaping
+    val odd = "a/b:c=d%e f"
+    val strs = freshStore()
+    strs.upsertPartitioned(spark, "t",
+      ((1 to 39).map(i => (s"k$i", "x", s"r$i")) :+ (("q", "x", odd)))
+        .toDF("k", "v", "region"),
+      Seq("k"), "region", numFiles = Some(1))
+    assert(fileState(strs, "t").keys.exists(_.contains("region=a%2Fb%3Ac%3Dd%25e f")))
+    val strJobs = jobCount(strs.upsertPartitioned(spark, "t",
+      Seq(("q", "y", odd)).toDF("k", "v", "region"),
+      Seq("k"), "region", numFiles = Some(1), partitions = Some(Seq(odd))))
+    assert(strJobs == 1, s"$strJobs jobs")
+    assert(strs.prunedRead(spark, "t", "region", Seq(odd)).collect()
+      .map(r => (r.getAs[String]("k"), r.getAs[String]("v"), r.getAs[Long]("nupdates"))).toSeq ==
+      Seq(("q", "y", 2L)))
+    assert(strs.prunedRead(spark, "t", "region", Seq("r3", "absent")).count() == 1)
+    assert(strs.read(spark, "t").count() == 40)
+  }
+
+  test("a caller partition list that misses an updates partition is refused; nothing is published") {
+    val store = freshStore()
+    val s = spark; import s.implicits._
+    store.upsertPartitioned(spark, "t", batch(1, Seq("a" -> "x")),
+      Seq("k"), "p_date", numFiles = Some(1))
+    val before = store.commitIdentity(spark, "t")
+    val rows = fileState(store, "t")
+    val f = new Path(store.livePath("t")).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def versionDirs(): Set[String] = f.listStatus(new Path(store.livePath("t")))
+      .filter(_.isDirectory).flatMap(p => f.listStatus(p.getPath)
+        .map(v => s"${p.getPath.getName}/${v.getPath.getName}")).toSet
+    val dirs = versionDirs()
+    val bad: Seq[DataFrame] = Seq(
+      batch(1, Seq("a" -> "y")).union(batch(2, Seq("b" -> "z"))),
+      Seq(("a", "y", Some(1)), ("c", "w", None)).toDF("k", "v", "opt")
+        .withColumn("p_date", $"opt".cast("int")).drop("opt"))
+    for (updates <- bad; numFiles <- Seq(Some(1), None)) {
+      val e = intercept[Exception] {
+        store.upsertPartitioned(spark, "t", updates, Seq("k"), "p_date",
+          numFiles = numFiles, partitions = Some(Seq(1)))
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("not in the declared partitions")), e)
+      assert(store.commitIdentity(spark, "t") == before)
+      assert(fileState(store, "t") == rows, "a refused commit must not stage data")
+      assert(versionDirs() == dirs, "a refused commit must leave no unreferenced v- dir")
+      assert(!f.listStatus(new Path(store.root)).exists(_.getPath.getName.startsWith(".tmp-")))
+    }
+    // and the declared list is honoured when it covers the batch
+    store.upsertPartitioned(spark, "t", bad.head, Seq("k"), "p_date",
+      numFiles = Some(1), partitions = Some(Seq(1, 2)))
+    assert(rowsOf(store, "t", "p_date") == Seq("a|y|1|2", "b|z|2|1"))
+  }
+
+  /** Data-file count of each partition dir of a retain-0 table. */
+  private def filesPerPartition(store: TableStore, name: String): Map[String, Int] =
+    fileState(store, name).keys.filter(_.endsWith(".parquet"))
+      .groupBy("p_date=[0-9]+".r.findFirstIn(_).getOrElse(""))
+      .map { case (p, fs) => p -> fs.size }
+
+  test("numFiles = Some(1) and None merge a multi-partition batch to the same rows and counters") {
+    def run(numFiles: Option[Int], partitions: Option[Seq[Any]]): (Seq[String], Map[String, Int]) = {
+      val store = freshStore()
+      store.upsertPartitioned(spark, "t",
+        batch(1, Seq("a" -> "x", "b" -> "y")).union(batch(2, Seq("c" -> "z")))
+          .union(batch(3, Seq("d" -> "w"))),
+        Seq("k"), "p_date", numFiles = numFiles)
+      store.upsertPartitioned(spark, "t",
+        batch(2, Seq("c" -> "z2", "e" -> "v")).union(batch(3, Seq("d" -> "w2")))
+          .union(batch(4, Seq("f" -> "u"))),
+        Seq("k"), "p_date", numFiles = numFiles, partitions = partitions)
+      (rowsOf(store, "t", "p_date"), filesPerPartition(store, "t"))
+    }
+    val (one, oneFiles) = run(Some(1), None)
+    assert(one == Seq("a|x|1|1", "b|y|1|1", "c|z2|2|2", "d|w2|3|2", "e|v|2|1", "f|u|4|1"))
+    assert(oneFiles.size == 4 && oneFiles.values.forall(_ == 1), oneFiles)
+    assert(run(None, None)._1 == one)
+    assert(run(Some(1), Some(Seq(2, 3, 4))) == ((one, oneFiles)))
+    assert(run(None, Some(Seq(2, 3, 4)))._1 == one)
+  }
+
+  test("numFiles = Some(1) writes one file per partition when the merge is shuffled") {
+    // an RDD-backed frame has no size estimate, so the merge plans a
+    // shuffle; with AQE's partition coalescing off its reduce side
+    // stays at four partitions
+    val store = freshStore()
+    store.upsertPartitioned(spark, "t", batch(2, Seq("c" -> "z")), Seq("k"), "p_date",
+      numFiles = Some(1))
+    val wide = batch(2, (1 to 20).map(i => s"w$i" -> "v"))
+    val aqeCoalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(aqeCoalesce)
+    spark.conf.set(aqeCoalesce, "false")
+    try store.upsertPartitioned(spark, "t", spark.createDataFrame(wide.rdd, wide.schema),
+      Seq("k"), "p_date", numFiles = Some(1), partitions = Some(Seq(2)))
+    finally prev.fold(spark.conf.unset(aqeCoalesce))(spark.conf.set(aqeCoalesce, _))
+    assert(filesPerPartition(store, "t") == Map("p_date=2" -> 1))
+    assert(store.read(spark, "t").count() == 21)
   }
 
   test("new partitions from a batch are created without touching existing ones") {
